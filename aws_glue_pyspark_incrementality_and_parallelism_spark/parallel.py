@@ -22,6 +22,10 @@ from typing import Any, Callable
 from pyspark.sql import SparkSession
 
 
+#: Thread-local properties that make up a job group (``setJobGroup``).
+_JOB_GROUP = ("spark.jobGroup.id", "spark.job.interruptOnCancel")
+
+
 @dataclass
 class ReportJob:
     """One unit of concurrent work: a name, a callable, and a FAIR pool."""
@@ -38,15 +42,23 @@ def run_concurrent(spark: SparkSession, jobs: list[ReportJob], max_workers: int 
     scheduling gaps between independent output jobs (exactly the
     reference's 'Parallelism' half). Exceptions propagate to the caller
     instead of dying silently inside an unawaited Future.
+
+    Each worker joins the caller's job group (a worker thread does not
+    inherit it) and describes its jobs by the job's name, so every Spark
+    job of a call is found under the caller's group.
     """
     sc = spark.sparkContext
+    group = {p: sc.getLocalProperty(p) for p in _JOB_GROUP}
 
     def _run(job: ReportJob) -> Any:
-        sc.setLocalProperty("spark.scheduler.pool", job.pool)
+        props = {**group, "spark.scheduler.pool": job.pool, "spark.job.description": job.name}
+        for p, v in props.items():
+            sc.setLocalProperty(p, v)
         try:
             return job.fn()
         finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
+            for p in props:
+                sc.setLocalProperty(p, None)
 
     results: dict[str, Any] = {}
     with ThreadPoolExecutor(max_workers=max_workers or len(jobs)) as executor:

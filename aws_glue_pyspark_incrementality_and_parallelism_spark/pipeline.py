@@ -9,25 +9,30 @@ Stages (reference line refs in parens):
 3. cache the joined frame once for both reports (:48)
 4. two grouped-sum reports submitted concurrently to FAIR pools
    (:52-55, missing-method/unawaited-futures B2/B3 fixed)
-5. partitioned parquet sinks (Redshift JDBC writer ≈ any sink fn)
+5. parquet sinks, one flat directory of part files per report, each
+   report's row count observed on its write (Redshift JDBC writer ≈ any
+   sink fn)
 6. bookmark commit AFTER both sinks succeed (B10 fixed)
 
 At scale: the joined frame is cached MEMORY_AND_DISK (it feeds two
-actions); sinks write partitioned by date instead of repartition(1);
+actions); sinks are not partitioned, and ``single_file_outputs``
+replaces the reference's repartition(1) with a shuffle-free coalesce(1);
 the HWM commit is the transaction boundary, so a crash re-runs one
 idempotent slice.
 """
 
 from __future__ import annotations
 
+import json
 import logging
 import os
+import time
 from dataclasses import dataclass
 from typing import Any
 
 log = logging.getLogger("engine.pipeline")
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -53,27 +58,42 @@ def run_etl(
 ) -> PipelineResult:
     """One incremental run of the two-report ETL. Re-runnable: each run
     processes only fact rows above the committed bookmark and overwrites
-    its own output slice (idempotent sink + commit-after-write)."""
+    its own output slice (idempotent sink + commit-after-write).
+
+    ``metrics`` holds the run record, also logged as one JSON line: the
+    bookmark before and after (``hwm_before``, ``hwm_after``), the rows
+    of the slice, of the join and of each report (``slice_rows``,
+    ``joined_rows``, ``report_rows``), the joined frame's other quality
+    counters, and seconds per phase (``phase_s``: load, hwm, reports,
+    commit). Every count comes from an ``Observation`` on a pass the run
+    makes anyway."""
     store = BookmarkStore(bookmark_path or os.path.join(output_dir, "_bookmarks.json"))
+    hwm_before = store.get("lineitem")
+    phase_s = dict.fromkeys(("load", "hwm", "reports", "commit"), 0.0)
+    t0 = time.perf_counter()
 
     fact = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     batch = incremental_read(fact, "l_orderkey", store, "lineitem")
+    t1 = time.perf_counter()
     hwm = batch.pending_hwm()
-    log.info("incremental read: prior hwm=%s pending hwm=%s", store.get("lineitem"), hwm)
+    t2 = time.perf_counter()
+    phase_s.update(load=t1 - t0, hwm=t2 - t1)
+    log.info("incremental read: prior hwm=%s pending hwm=%s", hwm_before, hwm)
     if hwm is None:
         log.info("empty batch; skipping reports and commit")
-        return PipelineResult(committed_hwm=store.get("lineitem"), report_rows={}, output_paths={})
+        metrics = _run_record(hwm_before, hwm_before, batch.rows, _QUALITY_ZEROS, {}, phase_s)
+        return PipelineResult(
+            committed_hwm=hwm_before, report_rows={}, output_paths={}, metrics=metrics
+        )
 
     lineitem = (
         batch.df.select("l_orderkey", "l_suppkey", "l_extendedprice", "l_shipdate")
         .withColumnRenamed("l_orderkey", "trn_orderkey")
         .withColumnRenamed("l_suppkey", "trn_suppkey")
     )
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-
-    from pyspark.sql import Observation
 
     # Data-quality counters ride the first action over the joined frame —
     # no extra pass, collected from the executors' task metrics (the
@@ -110,21 +130,29 @@ def run_etl(
         "sales_by_supplier": os.path.join(output_dir, "sales_by_supplier"),
     }
 
+    def _write_report(name: str, df: DataFrame) -> int:
+        """Write one report; its row count is observed on the write."""
+        rows = Observation()
+        write_parquet(
+            df.observe(rows, F.count(F.lit(1)).alias("rows")),
+            paths[name],
+            single_file=single_file_outputs,
+        )
+        return session.observed(rows, {"rows": 0})["rows"]
+
     def _customer_report() -> int:
         df = (
             joined.groupBy("c_custkey", "c_name", F.to_date("o_orderdate").alias("order_date"))
             .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
         )
-        write_parquet(df, paths["sales_by_customer"], single_file=single_file_outputs)
-        return spark.read.parquet(paths["sales_by_customer"]).count()
+        return _write_report("sales_by_customer", df)
 
     def _supplier_report() -> int:
         df = (
             joined.groupBy("s_suppkey", "s_name", F.to_date("l_shipdate").alias("ship_date"))
             .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
         )
-        write_parquet(df, paths["sales_by_supplier"], single_file=single_file_outputs)
-        return spark.read.parquet(paths["sales_by_supplier"]).count()
+        return _write_report("sales_by_supplier", df)
 
     log.info("running 2 reports concurrently (FAIR pools %s/%s)",
              session.POOL_USERS_REPORT, session.POOL_SUBSCRIPTIONS_REPORT)
@@ -140,14 +168,33 @@ def run_etl(
         )
     finally:
         joined.unpersist()
+    t3 = time.perf_counter()
 
-    metrics = dict(obs.get)
-    if metrics.get("joined_rows", 0) and metrics.get("null_prices", 0):
-        raise ValueError(f"data-quality gate: null prices in joined frame: {metrics}")
-    log.info("observed metrics: %s", metrics)
+    quality = session.observed(obs, _QUALITY_ZEROS)
+    if quality["joined_rows"] and quality["null_prices"]:
+        raise ValueError(f"data-quality gate: null prices in joined frame: {quality}")
 
     committed = batch.commit()  # only reached when both sinks succeeded
+    phase_s.update(reports=t3 - t2, commit=time.perf_counter() - t3)
     log.info("sinks committed; bookmark advanced to %s", committed)
+    metrics = _run_record(hwm_before, committed, batch.rows, quality, results, phase_s)
     return PipelineResult(
         committed_hwm=committed, report_rows=results, output_paths=paths, metrics=metrics
     )
+
+
+#: Quality counters of the joined frame when no row joined.
+_QUALITY_ZEROS = {"joined_rows": 0, "null_prices": 0, "min_orderdate": None, "max_orderdate": None}
+
+
+def _run_record(hwm_before, hwm_after, slice_rows, quality, report_rows, phase_s) -> dict[str, Any]:
+    record = {
+        "hwm_before": hwm_before,
+        "hwm_after": hwm_after,
+        "slice_rows": slice_rows,
+        **quality,
+        "report_rows": dict(report_rows),
+        "phase_s": {k: round(v, 4) for k, v in phase_s.items()},
+    }
+    log.info("run record %s", json.dumps(record, default=str))
+    return record

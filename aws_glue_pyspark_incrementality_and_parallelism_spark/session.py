@@ -28,6 +28,21 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def observed(obs, zeros: dict) -> dict:
+    """The metrics an ``Observation`` collected, or ``zeros`` (the values
+    its aggregates take over no rows) when none were collected.
+
+    Call only after the action over the observed frame has run. When AQE
+    finds the observed input empty (an inner join that matched nothing)
+    it plans the ``CollectMetrics`` node away; the observation then
+    completes with a schema-less row, and ``Observation.get`` fails in
+    ``PythonSQLUtils.toPyRow``. The row is checked on the JVM side first.
+    """
+    if obs._jo.getRow().schema() is None:
+        return dict(zeros)
+    return obs.get
+
+
 def pin(df, eager: bool = True):
     """Materialize a DataFrame and cut its lineage — the repo-wide
     pinning primitive for iterative loops (graph, k-means, connected

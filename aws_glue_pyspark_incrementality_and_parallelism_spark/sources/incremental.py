@@ -20,9 +20,13 @@ Known semantic (same as Glue, documented in SURVEY §7): an in-place
 UPDATE to an already-seen key is skipped. Callers that need update
 capture should bookmark on a monotonic ``last_modified`` column instead.
 
-At 100 TB the predicate prunes at the source: on a partitioned/bucketed
-table, ``key > hwm`` eliminates whole files/partitions via parquet
-min-max statistics, so incremental cost is O(new data), not O(table).
+At 100 TB the predicate prunes at the source: ``key > hwm`` skips every
+file, partition or row group whose parquet min-max statistics lie at or
+below the bookmark. Incremental cost is O(new data) only when row groups
+are clustered by the key (the table is written in key order, or
+partitioned/bucketed on it). An unclustered table, or one written as a
+single row group (the sf0.1 ``lineitem`` is one), is scanned whole on
+every run; the filter then saves downstream work, not I/O.
 """
 
 from __future__ import annotations
@@ -33,8 +37,10 @@ import tempfile
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..session import observed
 
 
 class BookmarkStore:
@@ -91,20 +97,34 @@ class IncrementalBatch:
     key: str | list[str]
     store: BookmarkStore
     _pending_hwm: Any = None
+    #: Rows in this batch, counted by the same pass as the HWM.
+    rows: int | None = None
 
     def pending_hwm(self) -> Any:
-        """Max key in this batch (one small agg job; None for empty batch).
+        """Max key in this batch; None for an empty batch.
+
+        One Spark job, no shuffle: an ``Observation`` of the max key rides
+        a ``noop`` write of the key columns, and counts the batch's rows
+        on the way (``rows``). A global aggregate would take two jobs,
+        because AQE runs its map stage as a job of its own. The pass runs
+        once per batch.
 
         For composite keys, ``max(struct(k1, k2, ...))`` — Spark orders
         structs lexicographically, so one aggregate yields the composite
         HWM without a sort."""
-        if self._pending_hwm is None:
-            if isinstance(self.key, str):
-                row = self.df.agg(F.max(self.key).alias("hwm")).collect()[0]
-                self._pending_hwm = row["hwm"]
-            else:
-                row = self.df.agg(F.max(F.struct(*self.key)).alias("hwm")).collect()[0]
-                self._pending_hwm = None if row["hwm"] is None else list(row["hwm"])
+        if self.rows is None:
+            single = isinstance(self.key, str)
+            keys = [self.key] if single else list(self.key)
+            top = F.max(self.key) if single else F.max(F.struct(*keys))
+            obs = Observation()
+            (
+                self.df.select(*keys)
+                .observe(obs, top.alias("hwm"), F.count(F.lit(1)).alias("rows"))
+                .write.format("noop").mode("overwrite").save()
+            )
+            got = observed(obs, {"hwm": None, "rows": 0})
+            hwm, self.rows = got["hwm"], got["rows"]
+            self._pending_hwm = hwm if single or hwm is None else list(hwm)
         return self._pending_hwm
 
     def commit(self) -> Any:

@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Driver-provided tables (/root/repo/TESTDATA.md).
 TABLES = (
@@ -37,11 +38,53 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: Parquet schemas :func:`load_table` inferred, one entry per local path:
+#: absolute path -> (key, schema). The key is the file listing's
+#: fingerprint plus the ``nanosAsLong`` setting, which changes how
+#: ``events.ts`` infers. Inference runs a one-task Spark job per read; a
+#: hit replaces it with ``spark.read.schema(schema)``. A rewrite, an
+#: appended file or a changed setting changes the key, and the next read
+#: infers again. Concurrent readers at worst infer twice; the entry is
+#: replaced whole.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _listing(path: str) -> tuple:
+    """(relative name, size, mtime) of every file under ``path``, which may
+    be a single file or a directory tree."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, _, names in os.walk(path):
+        for name in names:
+            full = os.path.join(root, name)
+            st = os.stat(full)
+            files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema taken from
+    ``_SCHEMAS`` when the files and the setting are as they were at the
+    last inference. Paths not on the local file system are read plainly."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    key = (_listing(path), spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    hit = _SCHEMAS.get(os.path.abspath(path))
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[os.path.abspath(path)] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table.
 
-    Plain ``spark.read.parquet`` so Catalyst gets predicate pushdown,
-    column pruning, and partition-split planning for free. Never collect
+    Plain parquet reads, so Catalyst gets predicate pushdown, column
+    pruning, and partition-split planning for free; the schema is
+    inferred once per version of the files (``_SCHEMAS``). Never collect
     here; scans must stay lazy so filters written later still reach the
     parquet reader.
 
@@ -58,7 +101,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_parquet(spark, table_path(sf_dir, name))
         # Temporal gate FIRST, on the raw physical column, so it pushes
         # into the scan; then normalize; then the measure gate. Exactly
         # equivalent to events_validity_gate(normalize_events_ts(df)) —
@@ -71,8 +114,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             normalize_events_ts(events_ts_domain_prefilter(df))
         )
     if name == "embeddings":
-        return embeddings_validity_gate(spark.read.parquet(table_path(sf_dir, name)))
-    return spark.read.parquet(table_path(sf_dir, name))
+        return embeddings_validity_gate(_read_parquet(spark, table_path(sf_dir, name)))
+    return _read_parquet(spark, table_path(sf_dir, name))
 
 
 #: Validity domain of the ``events.value`` measure and of embedding

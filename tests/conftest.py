@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
 
 import pytest
 
@@ -11,6 +12,30 @@ if REPO_ROOT not in sys.path:
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
+
+
+def within(seconds: float, fn, *args, **kwargs):
+    """``fn(*args, **kwargs)``, failing the test if it has not returned
+    after ``seconds`` (e.g. an ``Observation.get`` that waits for an
+    action that never ran). ``fn`` runs on a daemon thread, which does
+    not inherit the caller's Spark job group or pool; set those inside
+    ``fn``. A late call is left running."""
+    out: dict = {}
+
+    def target():
+        try:
+            out["value"] = fn(*args, **kwargs)
+        except BaseException as exc:  # re-raised on the test's thread
+            out["error"] = exc
+
+    thread = threading.Thread(target=target, daemon=True)
+    thread.start()
+    thread.join(seconds)
+    if thread.is_alive():
+        pytest.fail(f"{getattr(fn, '__name__', fn)} still running after {seconds} s")
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
 
 
 @pytest.fixture(scope="session")

@@ -44,3 +44,29 @@ def test_worker_exception_propagates(spark):
         raise AssertionError("expected ValueError")
     except ValueError:
         pass
+
+
+def test_workers_join_the_callers_job_group(spark):
+    """Jobs run by the workers are found under the caller's job group,
+    and each worker's jobs carry its job's name as their description."""
+    sc = spark.sparkContext
+    group = f"test-run-concurrent-{id(spark)}"
+
+    def job(n: int):
+        return sc.getLocalProperty("spark.job.description"), spark.range(n).count()
+
+    sc.setJobGroup(group, "caller")
+    try:
+        results = parallel.run_concurrent(
+            spark,
+            [
+                parallel.ReportJob("a", lambda: job(10), session.POOL_USERS_REPORT),
+                parallel.ReportJob("b", lambda: job(20), session.POOL_SUBSCRIPTIONS_REPORT),
+            ],
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert results == {"a": ("a", 10), "b": ("b", 20)}
+    # The caller ran no job itself, so these are the workers' jobs.
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
