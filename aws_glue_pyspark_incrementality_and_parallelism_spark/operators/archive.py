@@ -36,9 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..session import pickle_module_by_value
+from ..session import fan_out_compute, pickle_module_by_value
 from ..sources.io import load_table
-from .multimodal import fan_out
 
 DOCS_PER_SHARD = 64
 
@@ -189,7 +188,7 @@ def q_archive_tar_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression, byte/char payload totals, lexical member-name range.
     """
     # NULL-content rows have no shard member to write (modality absent)
-    docs = fan_out(
+    docs = fan_out_compute(
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
         .select("doc_id", "text")

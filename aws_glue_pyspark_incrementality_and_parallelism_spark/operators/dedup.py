@@ -50,21 +50,6 @@ def _tokens(text: Column) -> Column:
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
-def word_shingles(text: Column, n: int = SHINGLE_N) -> Column:
-    """Distinct n-word shingles. Falls back to the whole text when the
-    doc has fewer than n tokens."""
-    toks = _tokens(text)
-    joined = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, joined).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
-
-
 def _seeded_min(shingles: Column, seed: int) -> Column:
     """MinHash slot: min over shingles of xxhash64 prefixed with the
     permutation seed. One-arg lambda on purpose — PySpark maps lambda
@@ -480,12 +465,12 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("f", F.lit(1))
     )
     j = truth.join(found, ["doc_a", "doc_b"], "full")
+    # count, not sum: over zero pairs it reads 0, so the flags hold
+    # vacuously (a sum would be NULL).
     return j.agg(
-        F.sum("t").cast("bigint").alias("n_true"),
-        F.sum(
-            F.when(F.col("t").isNotNull() & F.col("f").isNotNull(), 1).otherwise(0)
-        ).alias("n_hit"),
-        F.sum(F.when(F.col("t").isNull(), 1).otherwise(0)).alias("n_extra"),
+        F.count("t").alias("n_true"),
+        F.count(F.when(F.col("t").isNotNull() & F.col("f").isNotNull(), 1)).alias("n_hit"),
+        F.count(F.when(F.col("t").isNull(), 1)).alias("n_extra"),
     ).select(
         "n_true",
         (F.col("n_hit") >= F.lit(MINHASH_RECALL_FLOOR) * F.col("n_true")).alias("recall_ok"),

@@ -49,7 +49,7 @@ from .jpeg import decode_baseline_jpeg, encode_gray_baseline
 from .png import decode_png
 from ..sources.io import load_table
 
-from ..session import pickle_module_by_value
+from ..session import fan_out_compute, pickle_module_by_value
 
 # Worker closures here reference module-level helpers (decode_rgb): ship
 # them by value so executors never need the package on their sys.path.
@@ -187,39 +187,9 @@ def text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lane, so they are SKIPPED here — the quarantine-adjacent choice —
     rather than crashing a Python mux stage on ``None.encode()``
     (round-5 NULL-corpus robustness class)."""
-    return fan_out(
+    return fan_out_compute(
         load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     ).select("doc_id", "text")
-
-
-def fan_out(df: DataFrame) -> DataFrame:
-    """Spread a CPU-bound Python codec stage across the cluster.
-
-    Parquet gives the documents table BYTE-sized splits (~10 MB of text
-    = 1 task), but the downstream mapInPandas does minutes of per-row
-    encode/decode work — inheriting the scan's partitioning runs the
-    whole codec pass on 1-2 cores (measured: multimodal_decode_mp4_frames
-    16 s -> 1-partition at sf0.1; the 10x corpus still only split in 2).
-    Round-robin repartition to the session's parallelism before the
-    Python stage: the shuffled text bytes are trivial next to per-row
-    codec cost, and at 100 TB the same decoupling holds — decode
-    parallelism should track CPUs, not input byte splits.
-
-    r10: routed through ``session.fan_out_compute`` with
-    ``elective=False`` — the spread here is LOAD-BEARING, not elective:
-    per-partition decode cost is tens of seconds, so skipping it under
-    a busy scheduler (tried first, measured in the r10 official bench)
-    turned each codec lane into a single-task straggler that held a
-    FAIR-pool slot for its whole serial runtime and took the concurrent
-    wave 60 s -> 272 s while the box idled at load ~13/32 (guide §2.6).
-    The busy-scheduler skip and the SPARK_GRAFT_FANOUT knob therefore
-    do NOT apply; the wide-input exit still does (a >=parallelism-file
-    production scan keeps its partitioning instead of collapsing to a
-    32-way exchange, which the pre-r10 unconditional repartition would
-    have forced)."""
-    from ..session import fan_out_compute
-
-    return fan_out_compute(df, elective=False)
 
 
 #: Magic prefixes of codec formats we cannot decode without external
@@ -1850,7 +1820,7 @@ def q_multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: decode+resize stay inside one mapInPandas batch at the scan
     — payload bytes never shuffle, the hot loop is numpy fancy-indexing
     per image, embarrassingly parallel across partitions."""
-    docs = fan_out(
+    docs = fan_out_compute(
         load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
     payload = F.concat(
@@ -1943,7 +1913,7 @@ def q_multimodal_image_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid arithmetic is shared between engine and oracle from one
     generator.
     """
-    docs = fan_out(
+    docs = fan_out_compute(
         load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     )
     payload = F.concat(

@@ -76,84 +76,28 @@ def pin(df, eager: bool = True):
     return df.localCheckpoint(eager=eager)
 
 
-#: Active-job threshold above which the elective fan-out is skipped (the
-#: scheduler is already saturated with concurrent independent jobs —
-#: guide §2.6). 3 = "clearly more than this one pipeline's own work".
-_FANOUT_BUSY_JOBS = 3
+def fan_out_compute(df, *cols):
+    """Spread a CPU-heavy map stage over ``defaultParallelism`` tasks. Use
+    as ``df.transform(fan_out_compute)`` right before the heavy kernel
+    (md5 replicate weights, token explode + hash votes, gram generation,
+    the Python codec lanes).
 
-
-def fan_out_compute(df, *cols, min_parts: int | None = None, elective: bool = True):
-    """Scale-adaptive fan-out for compute-heavy map stages (r9, guide
-    §2.5 "one huge unsplittable file" / §2.6 stragglers). Use as
-    ``df.transform(fan_out_compute)`` immediately before a CPU-bound
-    projection/partial-aggregate (md5 replicate weights, token
-    explode + hash votes, gram generation).
-
-    Why: the bench corpus — like any freshly-ingested staging drop —
-    arrives as single-row-group parquet, so a scan is ONE task no
-    matter the split config, and every expensive expression that rides
-    the scan stage runs on one core of 32 (measured: agg_bootstrap_ci's
-    explode+md5 kernel 3.7 s single-task at sf0.1). A hash repartition
-    on the relation's unique key spreads the heavy stage across the
-    cluster for the price of shuffling the narrow pre-explode rows.
-
-    Scale-adaptive, not a local constant: when the scan already has at
-    least cluster parallelism (any real 100 TB table), this is a NO-OP
-    — no exchange is added, so the production plan keeps its
-    shuffle-free scan stage. The target count is
-    ``defaultParallelism`` (driver-controlled via SPARK_GRAFT_CPUS),
-    never a literal. Pass a high-cardinality (ideally unique) key
-    column for deterministic-under-retry hash spreading (guide §2.5's
-    preference over round-robin); the keyless form round-robins
-    (deterministic via Spark's sort-before-repartition default,
-    SPARK-23207, at the cost of that local sort).
-
-    ``elective=False`` marks the fan-out as LOAD-BEARING: the stage it
-    feeds does so much per-row work (the Python codec lanes — tens of
-    seconds per partition) that skipping the spread turns the query
-    into a single-task straggler that holds one FAIR-pool slot hostage
-    for its whole serial runtime (guide §2.6), so neither the
-    busy-scheduler skip nor the SPARK_GRAFT_FANOUT A/B knob applies —
-    measured r10: routing the codec lanes through the busy skip took
-    the official concurrent wave 60 s -> 272 s (phash span 3 s -> 97 s)
-    while the box sat at load ~13 of 32.
+    A freshly-ingested single-row-group parquet file scans as ONE task,
+    so whatever rides the scan stage runs on one core (measured:
+    agg_bootstrap_ci's md5 kernel 3.7 s single-task at sf0.1; a codec
+    lane's decode pass holds one FAIR-pool slot for its whole serial
+    runtime). One rule, independent of scheduler load: ``df`` comes back
+    unchanged when it already has at least ``defaultParallelism``
+    partitions (any production-scale scan, whose shuffle-free stage is
+    kept); otherwise it is ``repartition(n, *cols)``. Pass a
+    high-cardinality (ideally unique) key for deterministic-under-retry
+    hash spreading; with no columns it round-robins (deterministic via
+    Spark's sort-before-repartition default, SPARK-23207).
     """
-    sc = df.sparkSession.sparkContext
-    mode = os.environ.get("SPARK_GRAFT_FANOUT", "") if elective else ""
-    if mode == "0":
-        # A/B kill-switch (r9 verdict task #1): lets the official bench
-        # measure suite-concurrency cost of the fan-out exchanges with
-        # everything else identical.
-        return df
-    if elective and mode != "1":
-        # Adaptive default (r10, measured per r9 verdict task #1): the
-        # fan-out exists to fill an IDLE cluster when a lone job's heavy
-        # kernel rides a one-task scan — the 8.6×/5×/2× isolated wins.
-        # When the scheduler is already saturated with concurrent
-        # independent jobs (guide §2.6: a few jobs in flight fill every
-        # core), the elective exchange buys no throughput and costs a
-        # shuffle plus 32-way task pressure per query: the r10 official
-        # A/B measured the 24-thread suite concurrent wall at ~62 s with
-        # fan-outs off vs ~87-131 s forced on (interleaved pairs,
-        # calibration-stamped — plans/r10/BENCH_AB_*.json). So consult
-        # the live scheduler (public StatusTracker API) at plan-build
-        # time and skip the elective fan-out when the cluster is already
-        # busy with other jobs. SPARK_GRAFT_FANOUT=1 forces the r9
-        # always-on behavior; =0 forces off. An isolated run — any lone
-        # production job, the bench's isolated/fresh columns — sees an
-        # idle scheduler and keeps the fan-out, at any scale.
-        try:
-            if len(sc.statusTracker().getActiveJobsIds()) >= _FANOUT_BUSY_JOBS:
-                return df
-        except Exception:  # pragma: no cover - probe is best-effort
-            pass
-    n = min_parts or sc.defaultParallelism
-    # Cheap wide-input exit first (ADVICE r9): a scan over >= n files can
-    # never need the fan-out, and len(inputFiles()) only needs the
-    # analyzed plan — the .rdd probe below forces a full physical-plan ->
-    # RDD conversion on the driver, which on a 100 TB table with a huge
-    # file listing is the expensive part. Narrow/unknown inputs (0 or few
-    # files, e.g. post-localCheckpoint) fall through to the precise probe.
+    n = df.sparkSession.sparkContext.defaultParallelism
+    # Wide-input exit first: len(inputFiles()) needs only the analyzed
+    # plan, while .rdd builds the physical plan on the driver, the
+    # expensive part on a table with a huge file listing.
     try:
         if len(df.inputFiles()) >= n:
             return df

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 import sys
 import threading
 
@@ -36,6 +37,13 @@ def within(seconds: float, fn, *args, **kwargs):
     if "error" in out:
         raise out["error"]
     return out["value"]
+
+
+def optimized_plan(df) -> str:
+    """The optimized plan without expression ids, and without the serial
+    numbers PySpark gives lambda variables (``x_1``) on each build."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"\bx_\d+", "x", re.sub(r"#\d+", "#", plan))
 
 
 @pytest.fixture(scope="session")

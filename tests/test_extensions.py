@@ -72,6 +72,36 @@ def test_minhash_mega_bucket_star_linearization(spark):
     assert all_pairs == {(i, j) for i in range(5) for j in range(i + 1, 5)}
 
 
+def test_minhash_summary_without_near_dups_matches_oracle(spark, tmp_path):
+    """A non-empty corpus with no Jaccard >= 0.5 pair: zero true pairs
+    and both flags vacuously true (0/true/true, not NULLs)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.plans.catalog import REGISTRY
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
+        TABLES,
+        table_path,
+    )
+
+    from .oracle import assert_parity
+
+    sf_dir = str(tmp_path)
+    for name in TABLES:
+        if name != "documents":
+            os.symlink(os.path.abspath(table_path(SF_SMALL, name)), table_path(sf_dir, name))
+    docs = pq.read_table(table_path(SF_SMALL, "documents")).slice(0, 8)
+    texts = [" ".join(f"d{i}w{k}" for k in range(20)) for i in range(docs.num_rows)]
+    docs = docs.set_column(docs.schema.get_field_index("text"), "text", pa.array(texts))
+    pq.write_table(docs, table_path(sf_dir, "documents"))
+
+    got = REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir).collect()
+    assert [tuple(r) for r in got] == [(0, True, True)]
+    assert_parity(spark, "dedup_minhash_lsh", sf_dir)
+
+
 def test_simhash_locality(spark):
     base = " ".join(f"word{i}" for i in range(100))
     near = " ".join(f"word{i}" for i in range(99)) + " changed"

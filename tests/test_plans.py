@@ -579,7 +579,7 @@ def test_scd2_apply_windows_only_over_batches(spark):
 
 def test_image_resize_python_stage_fans_out(spark):
     """Decode+resize happen in one mapInPandas, fed by exactly ONE
-    round-robin exchange (multimodal.fan_out): the documents scan is a
+    round-robin exchange (session.fan_out_compute): the documents scan is a
     single byte-split, so the CPU-bound Python stage must NOT inherit
     the scan's partitioning (round-4 fix — decode parallelism tracks
     CPUs, not input byte splits). No other shuffle may move payload

@@ -21,7 +21,7 @@ import json
 import pandas as pd
 import pytest
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, optimized_plan
 
 
 # ---------------------------------------------------------------- bench
@@ -225,48 +225,33 @@ def test_cogroup_asof_matches_within_user_across_2e53(spark, big_id_events_dir):
     assert got[p + 1]["purchase_id"] == 20 and got[p + 1]["view_id"] == 19
 
 
-# ------------------------------------------------- fan_out_compute modes
+# ------------------------------------------------------ fan_out_compute
 
 
-def test_fan_out_modes_and_busy_scheduler_skip(spark, monkeypatch):
-    from aws_glue_pyspark_incrementality_and_parallelism_spark import session as S
+def test_fan_out_rule_ignores_scheduler_load(spark, monkeypatch):
+    """One rule, whatever the scheduler is doing: a narrow frame fans out
+    to ``defaultParallelism``, a wide one comes back as is, and a
+    fan-out query plans the same with the scheduler idle and busy."""
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.plans.catalog import REGISTRY
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.session import fan_out_compute
 
-    df = spark.range(10).coalesce(1)
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "0")
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 1
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "1")
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 4
-    # adaptive default: idle scheduler -> fan out
-    monkeypatch.delenv("SPARK_GRAFT_FANOUT", raising=False)
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 4
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    bootstrap = REGISTRY["agg_bootstrap_ci"].fn
+    idle = optimized_plan(bootstrap(spark, SF_SMALL))
 
-    # adaptive default: saturated scheduler -> elective fan-out skipped
     class _BusyTracker:
         def getActiveJobsIds(self):
             return [1, 2, 3, 4, 5]
 
-    monkeypatch.setattr(
-        spark.sparkContext, "statusTracker", lambda: _BusyTracker()
-    )
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 1
-    # load-bearing (elective=False) fan-outs — the codec lanes — ignore
-    # the busy probe: skipping would serialize a tens-of-seconds Python
-    # decode stage onto one task (measured 60 s -> 272 s concurrent wave)
-    assert (
-        S.fan_out_compute(df, min_parts=4, elective=False)
-        .rdd.getNumPartitions()
-        == 4
-    )
-    # ... and the A/B kill-switch does not apply to them either
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "0")
-    assert (
-        S.fan_out_compute(df, min_parts=4, elective=False)
-        .rdd.getNumPartitions()
-        == 4
-    )
-    # forced ON ignores the busy probe
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "1")
-    assert S.fan_out_compute(df, min_parts=4).rdd.getNumPartitions() == 4
+    monkeypatch.setattr(sc, "statusTracker", lambda: _BusyTracker())
+    narrow = spark.range(10).coalesce(1)
+    assert fan_out_compute(narrow).rdd.getNumPartitions() == n
+    wide = spark.range(0, 10, 1, n)
+    assert fan_out_compute(wide) is wide
+    busy = optimized_plan(bootstrap(spark, SF_SMALL))
+    assert "Repartition" in busy
+    assert busy == idle
 
 
 # ----------------------------------------------------- JPEG DHT guards

@@ -4,7 +4,6 @@ and runs no inference job, and any change to the files is seen."""
 from __future__ import annotations
 
 import os
-import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -17,14 +16,7 @@ from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
     table_path,
 )
 
-from .conftest import SF_SMALL
-
-
-def _optimized_plan(df) -> str:
-    """The optimized plan without expression ids, and without the serial
-    numbers PySpark gives lambda variables (``x_1``) on each build."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return re.sub(r"\bx_\d+", "x", re.sub(r"#\d+", "#", plan))
+from .conftest import SF_SMALL, optimized_plan
 
 
 @pytest.mark.parametrize("name", TABLES)
@@ -39,7 +31,7 @@ def test_warm_read_plans_as_cold_and_runs_no_job(spark, name):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
-    assert _optimized_plan(warm) == _optimized_plan(cold)
+    assert optimized_plan(warm) == optimized_plan(cold)
 
 
 def test_rewrite_and_append_are_seen(spark, tmp_path):
