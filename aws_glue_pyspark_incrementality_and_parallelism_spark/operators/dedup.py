@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.registry import query
-from ..session import fan_out_compute, pin
+from ..session import fan_out_compute, iterate, pin
 from ..sources.io import load_table
 
 #: MinHash parameters: 32 hashes = 8 bands × 4 rows. With threshold
@@ -696,34 +696,26 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Propagate+jump rounds fused into each materialized loop step.
-#: DEFAULT 1 — a recorded NEGATIVE result (round-8, verdict task #4):
-#: the loop's per-job cost at converged-graph sizes is ~0.5 s/job
-#: (scheduler + localCheckpoint materialization over a 651-node active
-#: set at sf0.1 — the semdedup loop runs 5 rounds: changed counts
-#: 351/47/7/2/0), so batching k rounds per job LOOKS like it should
-#: halve the loop cost. Measured fresh-subprocess (warm-up + min of 2,
-#: sf0.1): dedup_semdedup_purge 4.76 s at k=1, 6.17 s at k=2, 10.69 s
-#: at k=4; dedup_embedding_components 3.01 / 4.52 / 14.47 s. Each
-#: unrolled round deepens the un-checkpointed plan by three joins, and
-#: Catalyst's analysis/optimization of the deepened tree costs MORE
-#: than the ~0.5 s/job it saves — at every k tested. The per-iteration
-#: floor is therefore the flat-plan job itself, and the knob stays for
-#: environments where scheduling (not driver planning) dominates.
-CC_UNROLL = 1
+#: Round cap of the propagate+jump loop; path halving converges in
+#: O(log diameter) rounds.
+CC_MAX_ROUNDS = 15
 
 #: Edge-count ceiling for the single-task union-find finish (r10). Two
 #: regimes, the classic MapReduce-CC design (Kiveris et al. 2014,
 #: "Connected Components in MapReduce and Beyond", §"finish on one
 #: machine when the graph fits"): below this many (symmetrized) edges
-#: the whole active subgraph fits ONE executor task with room to spare
-#: (2²¹ edges ≈ 32 MB of int64 pairs + O(nodes) DSU arrays), so the
-#: exact union-find replaces ~⌈log d⌉+1 propagate+jump JOBS whose cost
-#: at converged-graph sizes is pure scheduler/checkpoint latency (the
-#: CC_UNROLL ledger above: ~0.5-1.5 s per job). Above it, the iterative
-#: path runs unchanged — at 100 TB a billion-edge near-dup graph never
-#: sees the local regime. The count rides the sym checkpoint's own
-#: materialization job via an Observation (no extra action).
+#: the whole active subgraph fits ONE executor task, so the exact
+#: union-find replaces ~⌈log d⌉+1 propagate+jump JOBS whose cost at
+#: converged-graph sizes is pure scheduler/checkpoint latency (~0.5-1.5 s
+#: per job). Cost at the cap is far more than the 32 MB of int64 pairs:
+#: the DSU loop walks Python ints, so ``.tolist()`` boxes about 4M of
+#: them (168 MB measured for a random 2²¹-edge graph, plus 41 MB for
+#: the ``parent`` list over its 1M nodes) and the loop ran 2.9 s of
+#: single-task Python time on a shared 4-core VM. Re-measure before
+#: raising the cap. Above it, the iterative path runs unchanged — at
+#: 100 TB a billion-edge near-dup graph never sees the local regime.
+#: The count rides the sym checkpoint's own materialization job via an
+#: Observation (no extra action).
 _CC_LOCAL_EDGE_MAX = 1 << 21
 
 
@@ -760,9 +752,7 @@ def _cc_local_union_find(pdf):
     return pd.DataFrame({"doc_id": nodes, "comp": nodes[roots]})
 
 
-def connected_components(
-    edges: DataFrame, nodes: DataFrame, max_iters: int = 15
-) -> DataFrame:
+def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Connected components by min-label propagation: every node starts
     labeled with its own id; each round takes the min label over
     neighbors, then POINTER-JUMPS (path halving: relabel to the label's
@@ -774,13 +764,10 @@ def connected_components(
     for shallow near-dup clusters, quadratic-feeling on the long chains
     a dense threshold graph grows; the jump step cuts that to
     O(log diameter) (the Hash-to-Min idea, cf. Rastogi et al. '12 /
-    large-star–small-star). ``CC_UNROLL`` rounds are fused into each
-    materialized step (one localCheckpoint + one Observation
-    convergence count per JOB, not per round); the default is 1 —
-    unrolling was measured SLOWER because Catalyst's planning of the
-    deepened join tree costs more than the saved jobs (see the
-    ``CC_UNROLL`` note for the numbers). ``nodes``/``edges`` columns:
-    (doc_id), (doc_a, doc_b).
+    large-star–small-star). Each round is one pinned job of
+    ``session.iterate``, at most ``CC_MAX_ROUNDS``. ``nodes``/``edges``
+    columns: (doc_id), (doc_a, doc_b); ids are integral (the loop's
+    convergence signature is their exact sum).
 
     Two scale guards, both essential when edges come from an expensive
     upstream (blocked GEMM / LSH verification):
@@ -825,13 +812,9 @@ def connected_components(
         )
         return labels.unionByName(isolated_l.withColumn("comp", F.col("doc_id")))
     active = sym.select(F.col("doc_a").alias("doc_id")).distinct()
-    labels = active.withColumn("comp", F.col("doc_id")).transform(pin)
 
     def _round(lbl: DataFrame) -> DataFrame:
-        """One propagate+jump round over (doc_id, prev, comp); ``prev``
-        (the label at the start of the current JOB batch) rides through
-        untouched so the batch's convergence count needs no extra
-        join."""
+        """One propagate+jump round over (doc_id, comp)."""
         neighbor_min = (
             sym.join(
                 lbl.select(
@@ -846,7 +829,6 @@ def connected_components(
             lbl.join(neighbor_min, lbl.doc_id == neighbor_min.doc_a, "left")
             .select(
                 "doc_id",
-                "prev",
                 F.least(F.col("comp"), F.coalesce("nmin", "comp")).alias("comp"),
             )
         )
@@ -860,30 +842,18 @@ def connected_components(
             stepped.join(lut, stepped.comp == lut.c_id, "left")
             .select(
                 "doc_id",
-                "prev",
                 F.least(F.col("comp"), F.coalesce("c_comp", "comp")).alias("comp"),
             )
         )
 
-    rounds_left = max_iters
-    while rounds_left > 0:
-        k = min(CC_UNROLL, rounds_left)
-        rounds_left -= k
-        cur = labels.select("doc_id", F.col("comp").alias("prev"), "comp")
-        for _ in range(k):
-            cur = _round(cur)
-        # The convergence count rides the SAME action as the checkpoint
-        # (Observation metrics fire on the eager materialization), so
-        # each k-round batch is ONE Spark job — no separate count pass.
-        # Labels only ever decrease, so changed == 0 across a whole
-        # batch implies the per-round fixpoint.
-        obs = Observation()
-        observed = cur.observe(
-            obs, F.sum((F.col("comp") != F.col("prev")).cast("long")).alias("changed")
-        )
-        labels = observed.select("doc_id", "comp").transform(pin)
-        if obs.get["changed"] == 0:
-            break
+    # Labels only fall and the node set is fixed, so an unchanged exact
+    # label total means no label moved.
+    labels = iterate(
+        active.withColumn("comp", F.col("doc_id")),
+        _round,
+        [F.sum(F.col("comp").cast("decimal(38,0)"))],
+        CC_MAX_ROUNDS,
+    )
     isolated = nodes.select("doc_id").join(active, "doc_id", "left_anti")
     return labels.unionByName(isolated.withColumn("comp", F.col("doc_id")))
 

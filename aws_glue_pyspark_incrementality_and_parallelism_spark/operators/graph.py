@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..session import pin
+from ..session import iterate, pin
 from ..sources.io import load_table
 
 DAMPING = 0.85
@@ -259,6 +259,16 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return n_e.crossJoin(n_t)
 
 
+def _symmetric(pairs: DataFrame) -> DataFrame:
+    """Both directions of an undirected ``(doc_a, doc_b)`` edge list,
+    pinned: the loop invariant every BFS, Bellman-Ford and k-core round
+    joins against."""
+    pairs = pairs.select("doc_a", "doc_b")
+    return pairs.union(
+        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    ).transform(pin)
+
+
 #: BFS depth cap — both the Spark loop and the oracle's recursive CTE
 #: stop here, so "unreached within 8 hops" means the same on both sides.
 BFS_MAX_LEVELS = 8
@@ -303,49 +313,42 @@ def q_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup graph, capped at ``BFS_MAX_LEVELS``. The third member of
     the iterative-graph family — PageRank re-aggregates the WHOLE rank
     vector per pass and connected components relabels every active
-    node, but BFS's loop state is only the FRONTIER: per level one
-    edge⋈frontier join, one distinct, one anti-join against the
-    visited set, each relation localCheckpoint'ed so lineage stays
-    flat. At 100 TB the frontier join shuffles O(frontier boundary)
-    rows per level, not O(graph) — the property that makes
-    landmark-distance / k-hop-neighborhood features computable on
-    web-scale graphs. Early exit when a level's frontier is empty (the
-    count is the same action that materializes the checkpoint).
-    Oracle: DuckDB recursive CTE over the identical Jaccard≥0.5 edge
-    set with the same level cap."""
+    node, but BFS's loop grows only from the FRONTIER (the rows the
+    last level added): per level one edge⋈frontier join, one distinct
+    and one anti-join against the visited set, which is pinned once
+    per level (``session.iterate``) so lineage stays flat. At 100 TB
+    the frontier join shuffles O(frontier boundary) rows per level, not
+    O(graph) — the property that makes landmark-distance /
+    k-hop-neighborhood features computable on web-scale graphs. Stops
+    at the first level that adds no node. Oracle: DuckDB recursive CTE
+    over the identical Jaccard≥0.5 edge set with the same level cap."""
     from .dedup import q_dedup_ngram_jaccard
 
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    sym = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).transform(pin)
+    sym = _symmetric(q_dedup_ngram_jaccard(spark, sf_dir))
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     sources = docs.filter(F.col("doc_id") % 10 == 0).select("doc_id").distinct()
 
-    from pyspark.sql import Observation
-
-    levels = sources.withColumn("level", F.lit(0)).transform(pin)
-    frontier = levels.select("doc_id")
-    for lvl in range(1, BFS_MAX_LEVELS + 1):
-        # r10: the frontier count rides the checkpoint's own action via
-        # an Observation (the connected_components trick) — the old
-        # ``nxt.isEmpty()`` was a separate per-level job.
-        obs = Observation()
+    def expand(levels: DataFrame) -> DataFrame:
+        # The frontier is the rows the previous level added (``new``).
+        frontier = levels.filter("new")
         nxt = (
             sym.join(frontier, sym.doc_a == frontier.doc_id)
-            .select(F.col("doc_b").alias("doc_id"))
+            .select(F.col("doc_b").alias("doc_id"), (F.col("level") + 1).alias("level"))
             .distinct()
             .join(levels, "doc_id", "left_anti")
-            .withColumn("level", F.lit(lvl))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .transform(pin)
         )
-        if obs.get["n"] == 0:
-            break
-        levels = levels.union(nxt).transform(pin)
-        frontier = nxt.select("doc_id")
-    return levels
+        return levels.withColumn("new", F.lit(False)).unionByName(
+            nxt.withColumn("new", F.lit(True))
+        )
+
+    levels = iterate(
+        sources.withColumn("level", F.lit(0)).withColumn("new", F.lit(True)),
+        expand,
+        [F.count(F.lit(1))],
+        BFS_MAX_LEVELS,
+    )
+    return levels.select("doc_id", "level")
 
 
 @query(
@@ -478,59 +481,31 @@ def q_graph_sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import q_dedup_ngram_jaccard
 
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    wt = (F.col("doc_a") + F.col("doc_b")) % 7 + 1
-    sym = (
-        pairs.select("doc_a", "doc_b", wt.alias("wt"))
-        .union(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"),
-                F.col("doc_a").alias("doc_b"),
-                wt.alias("wt"),
-            )
-        )
-        .transform(pin)
+    sym = _symmetric(q_dedup_ngram_jaccard(spark, sf_dir)).withColumn(
+        "wt", (F.col("doc_a") + F.col("doc_b")) % 7 + 1
     )
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    dist = (
+    sources = (
         docs.filter(F.col("doc_id") % 10 == 0)
         .select("doc_id")
         .distinct()
         .withColumn("dist", F.lit(0))
-        .transform(pin)
     )
-    # r10 (guide §1/§5): relaxation is MONOTONE — per node the distance
-    # only ever decreases and nodes are only ever added, so a round that
-    # changes neither the node count nor the distance total has hit the
-    # fixpoint and the remaining rounds are exact no-ops (hop-bounded
-    # semantics unchanged: rounds past convergence cannot relax
-    # anything). The (count, sum) pair rides the checkpoint's own action
-    # via an Observation — no extra job.
-    from pyspark.sql import Observation
 
-    prev_sig: tuple | None = None
-    for _ in range(SSSP_ROUNDS):
+    def relax(dist: DataFrame) -> DataFrame:
         cand = sym.join(dist, sym.doc_a == dist.doc_id).select(
             F.col("doc_b").alias("doc_id"),
             (F.col("dist") + F.col("wt")).alias("dist"),
         )
-        obs = Observation()
-        dist = (
-            dist.union(cand)
-            .groupBy("doc_id")
-            .agg(F.min("dist").alias("dist"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("dist").alias("total"),
-            )
-            .transform(pin)
-        )
-        sig = (obs.get["n"], obs.get["total"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+        return dist.union(cand).groupBy("doc_id").agg(F.min("dist").alias("dist"))
+
+    # Relaxation is monotone (distances only fall, nodes are only
+    # added), so an unchanged (count, total) is the fixpoint and the
+    # remaining rounds could relax nothing: hop-bounded semantics hold.
+    dist = iterate(
+        sources, relax, [F.count(F.lit(1)), F.sum("dist")], SSSP_ROUNDS
+    )
     return dist.select("doc_id", F.col("dist").cast("int").alias("dist"))
 
 
@@ -617,43 +592,31 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import q_dedup_ngram_jaccard
 
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    sym = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).transform(pin)
+    sym = _symmetric(q_dedup_ngram_jaccard(spark, sf_dir))
 
-    from pyspark.sql import Observation
+    def restrict(active: DataFrame) -> DataFrame:
+        return sym.join(active.withColumnRenamed("node", "doc_a"), "doc_a").join(
+            active.withColumnRenamed("node", "doc_b"), "doc_b"
+        )
 
-    active = sym.select(F.col("doc_a").alias("node")).distinct().transform(pin)
-    # r10 (guide §1/§5): peeling is MONOTONE — the active set only ever
-    # shrinks, so a round that drops nothing is the fixpoint and every
-    # remaining unrolled round is an exact no-op (the docstring contract
-    # both engines share). Count survivors via an Observation riding the
-    # SAME action as the checkpoint (the connected_components trick) and
-    # break when the count stops falling: on this graph peeling settles
-    # well before KCORE_ROUNDS, so ~half the per-round jobs disappear
-    # with byte-identical output.
-    prev_n: int | None = None
-    for _ in range(KCORE_ROUNDS):
-        restricted = sym.join(
-            active.withColumnRenamed("node", "doc_a"), "doc_a"
-        ).join(active.withColumnRenamed("node", "doc_b"), "doc_b")
-        obs = Observation()
-        active = (
-            restricted.groupBy("doc_a")
+    def peel(active: DataFrame) -> DataFrame:
+        return (
+            restrict(active)
+            .groupBy("doc_a")
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= KCORE_K)
             .select(F.col("doc_a").alias("node"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .transform(pin)
         )
-        n = obs.get["n"]
-        if prev_n is not None and n == prev_n:
-            break
-        prev_n = n
-    final = sym.join(active.withColumnRenamed("node", "doc_a"), "doc_a").join(
-        active.withColumnRenamed("node", "doc_b"), "doc_b"
+
+    # Peeling is monotone (the active set only shrinks), so an unchanged
+    # survivor count is the fixpoint every remaining unrolled round of
+    # the oracle reproduces.
+    active = iterate(
+        sym.select(F.col("doc_a").alias("node")).distinct(),
+        peel,
+        [F.count(F.lit(1))],
+        KCORE_ROUNDS,
     )
-    return final.groupBy(F.col("doc_a").alias("doc_id")).agg(
+    return restrict(active).groupBy(F.col("doc_a").alias("doc_id")).agg(
         F.count("*").cast("int").alias("core_degree")
     )

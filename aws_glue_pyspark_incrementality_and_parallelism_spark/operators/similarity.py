@@ -568,7 +568,10 @@ def kmeans_refine(
     aggregate and the centroid update read it once instead of running
     the pass twice — at corpus scale this becomes persist(DISK).
     Returns (refined centroids, per-iteration inertia) — inertia is
-    monotonically non-increasing, asserted in pytest."""
+    monotonically non-increasing, asserted in pytest. The centroids are
+    one unpinned aggregate over the last pinned assignment: a caller
+    that runs several actions on them should pin them
+    (``.transform(pin)``)."""
     from pyspark.sql import Observation
 
     inertias: list[float] = []

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
@@ -45,8 +45,8 @@ def observed(obs, zeros: dict) -> dict:
 
 def pin(df, eager: bool = True):
     """Materialize a DataFrame and cut its lineage — the repo-wide
-    pinning primitive for iterative loops (graph, k-means, connected
-    components, BPE) and multi-axis distrank rewrites. Use as
+    pinning primitive for iterative loops (``iterate``, PageRank,
+    k-means, Markov) and multi-axis distrank rewrites. Use as
     ``df.transform(pin)``.
 
     Default: ``localCheckpoint`` — executor-local, unreplicated blocks,
@@ -74,6 +74,38 @@ def pin(df, eager: bool = True):
             )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def iterate(state, step, signature, max_rounds: int):
+    """Run a monotone fixpoint loop: pin ``state``, then
+    ``state = pin(step(state))`` until a round leaves ``signature``
+    unchanged or ``max_rounds`` steps have run; returns the last state.
+
+    ``signature`` is a list of aggregate Columns (a count, an exact
+    sum) observed through an ``Observation`` on each pin's own action,
+    so a round is one pin and no separate convergence pass; round 0 is
+    the initial pin. Stopping on an equal signature is exact only
+    when the step is monotone, so that an unchanged signature implies an
+    unchanged state: a set that only shrinks (count), labels that only
+    fall over a fixed node set (sum), distances that only fall over a
+    set that only grows (count, sum). Works under both ``pin`` lanes.
+    """
+    sig = [c.alias(f"_sig{i}") for i, c in enumerate(signature)]
+
+    def pin_observed(df):
+        obs = Observation()
+        pinned = pin(df.observe(obs, *sig))
+        # {} when AQE planned the observation of an empty state away;
+        # two empty states in a row are equal, so {} == {} stops exactly.
+        return pinned, observed(obs, {})
+
+    state, prev = pin_observed(state)
+    for _ in range(max_rounds):
+        state, cur = pin_observed(step(state))
+        if cur == prev:
+            break
+        prev = cur
+    return state
 
 
 def fan_out_compute(df, *cols):

@@ -282,28 +282,6 @@ def test_connected_components_planted_chain(spark):
     assert comp[99] == 99
 
 
-def test_connected_components_unroll_k_is_equivalent(spark, monkeypatch):
-    """CC_UNROLL > 1 (the measured-slower but documented knob) must
-    produce identical components to the k=1 default — the per-BATCH
-    convergence check (changed==0 across k rounds) has to reach the
-    same fixpoint. Probed on a long chain (worst case for round count:
-    the fixpoint needs several propagate+jump rounds) plus a cycle and
-    isolated nodes, at k=2 and k=3 (odd k exercises a batch that ends
-    mid-doubling)."""
-    chain = [(i, i + 1) for i in range(1, 12)]          # 1-2-3-...-12
-    cycle = [(20, 21), (21, 22), (22, 20)]
-    edges = spark.createDataFrame(chain + cycle, "doc_a long, doc_b long")
-    nodes = spark.createDataFrame(
-        [(i,) for i in list(range(1, 13)) + [20, 21, 22, 99]], "doc_id long"
-    )
-    base = {r.doc_id: r.comp for r in dedup.connected_components(edges, nodes).collect()}
-    assert base[12] == 1 and base[22] == 20 and base[99] == 99
-    for k in (2, 3):
-        monkeypatch.setattr(dedup, "CC_UNROLL", k)
-        got = {r.doc_id: r.comp for r in dedup.connected_components(edges, nodes).collect()}
-        assert got == base, f"CC_UNROLL={k} diverged from k=1"
-
-
 def test_hll_rollup_estimate_within_5pct(spark):
     """The merged-sketch year estimate must track exact distinct counts
     (HLL lgK=12 has ~1.6% relative standard error)."""
@@ -586,6 +564,59 @@ def test_pin_reliable_mode_env_knob(spark, tmp_path, monkeypatch):
 
     local_path = active.removeprefix("file:")
     assert any(files for _, _, files in _os.walk(local_path))
+
+
+def _iterate_toy(spark, cap, max_rounds):
+    """session.iterate over a monotone toy loop: every ``v`` climbs by one
+    per round up to ``cap`` (``None``: no cap), so the signature sum(v)
+    first repeats at round cap + 1. Returns the final frame and the
+    number of steps run."""
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.session import iterate
+
+    steps = []
+
+    def step(df):
+        steps.append(1)
+        v = F.col("v") + 1
+        return df.select("id", (v if cap is None else F.least(v, F.lit(cap))).alias("v"))
+
+    out = iterate(spark.range(8).withColumn("v", F.lit(0)), step, [F.sum("v")], max_rounds)
+    return out, len(steps)
+
+
+def _values(df):
+    return sorted(r.v for r in df.collect())
+
+
+def test_iterate_stops_when_signature_repeats(spark):
+    """The loop stops at the first round whose signature equals the
+    previous one (round 4 for cap 3), not at ``max_rounds``, and runs
+    one job per pin: the initial pin plus one per round."""
+    sc = spark.sparkContext
+    sc.setJobGroup("test-iterate", "test-iterate")
+    try:
+        out, rounds = _iterate_toy(spark, cap=3, max_rounds=10)
+        jobs = sc.statusTracker().getJobIdsForGroup("test-iterate")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rounds == 4
+    assert len(jobs) == 5
+    assert _values(out) == [3] * 8
+
+
+def test_iterate_stops_at_max_rounds(spark):
+    out, rounds = _iterate_toy(spark, cap=None, max_rounds=3)
+    assert (_values(out), rounds) == ([3] * 8, 3)
+
+
+def test_iterate_reliable_pin_matches_local(spark, tmp_path, monkeypatch):
+    """The signature Observation also fires through ``checkpoint()``."""
+    out, rounds = _iterate_toy(spark, cap=3, max_rounds=10)
+    local = (_values(out), rounds)
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_PIN", "1")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    out, rounds = _iterate_toy(spark, cap=3, max_rounds=10)
+    assert (_values(out), rounds) == local == ([3] * 8, 4)
 
 
 def test_quarantine_never_aborts_on_adversarial_corpus(spark):
