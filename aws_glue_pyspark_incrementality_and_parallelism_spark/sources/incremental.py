@@ -59,17 +59,21 @@ class BookmarkStore:
         with open(self.path) as f:
             return json.load(f)
 
+    def _save(self, state: dict[str, Any]) -> None:
+        folder = os.path.dirname(os.path.abspath(self.path))
+        os.makedirs(folder, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=folder)
+        with os.fdopen(fd, "w") as f:
+            json.dump(state, f)
+        os.replace(tmp, self.path)
+
     def get(self, source: str) -> Any | None:
         return self._load().get(source)
 
     def commit(self, source: str, hwm: Any) -> None:
         state = self._load()
         state[source] = hwm
-        os.makedirs(os.path.dirname(os.path.abspath(self.path)), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(os.path.abspath(self.path)))
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        self._save(state)
 
     def reset(self, source: str | None = None) -> None:
         if source is None:
@@ -78,10 +82,7 @@ class BookmarkStore:
             return
         state = self._load()
         state.pop(source, None)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(os.path.abspath(self.path)))
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        self._save(state)
 
 
 @dataclass

@@ -7,7 +7,10 @@ readers still parse it):
 The full per-query timing map goes to BENCH_DETAIL.json next to this file,
 with two columns per expensive query: "queries" (under suite concurrency)
 and "isolated" (serial re-run on an idle scheduler, excluded from the
-headline wall) so cross-round regressions stay attributable.
+headline wall) so cross-round regressions stay attributable. A third
+column, "isolated_fresh", re-times the fixed ``FRESH_PANEL`` in fresh
+subprocess sessions, so rounds compare fresh against fresh on the same
+names; "sysinfo" is perfbench's ``HostStamp`` taken across the run.
 
 Each query is forced with the no-op sink (computes every output column,
 writes nothing) so timings reflect full plan execution, not just a count.
@@ -30,6 +33,7 @@ import json
 import os
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
@@ -41,6 +45,12 @@ from aws_glue_pyspark_incrementality_and_parallelism_spark.operators import mult
 from aws_glue_pyspark_incrementality_and_parallelism_spark.parallel import ReportJob, run_concurrent
 from aws_glue_pyspark_incrementality_and_parallelism_spark.plans import catalog
 from aws_glue_pyspark_incrementality_and_parallelism_spark.session import build_spark
+from perfbench.trace import HostStamp
+
+#: Sequential phase: a 3-deep query pool on 8 shuffle partitions (see
+#: the phase comment in main()).
+_SEQ_THREADS = 3
+_SEQ_SHUFFLE = 8
 
 
 def _force(df) -> None:
@@ -95,58 +105,6 @@ for name in names:
 spark.stop()
 print("FRESH_JSON:" + json.dumps(out))
 """
-
-
-def _sysinfo() -> dict:
-    """One-line machine/session-speed context for BENCH_DETAIL: load
-    average at start-of-write, online CPUs, and free memory. Best-effort
-    — a missing /proc or API never fails the bench."""
-    info: dict = {}
-    try:
-        la1, la5, la15 = os.getloadavg()
-        info["loadavg"] = [round(la1, 2), round(la5, 2), round(la15, 2)]
-    except OSError:
-        pass
-    try:
-        info["cpus_online"] = os.cpu_count()
-    except Exception:  # noqa: BLE001
-        pass
-    try:
-        with open("/proc/meminfo") as f:
-            mem = {
-                line.split(":")[0]: int(line.split()[1])
-                for line in f
-                if line.startswith(("MemTotal", "MemAvailable"))
-            }
-        info["mem_total_gib"] = round(mem.get("MemTotal", 0) / 1048576, 1)
-        info["mem_available_gib"] = round(mem.get("MemAvailable", 0) / 1048576, 1)
-    except OSError:
-        pass
-    # Hypervisor steal (r9 bench hygiene): loadavg only sees THIS VM's
-    # runnable tasks, but round-over-round walls on this host swing 3×
-    # with CPU stolen by co-tenants (observed cumulative steal ≈ 45% of
-    # user ticks mid-round-9). Record the counter plus a ~100 ms
-    # single-core hash calibration so a reader can normalize a headline
-    # against host speed instead of guessing.
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        info["cpu_ticks_user"] = int(parts[1])
-        info["cpu_ticks_steal"] = int(parts[8])
-    except (OSError, IndexError, ValueError):
-        pass
-    try:
-        import hashlib
-        import time as _t
-
-        t0 = _t.perf_counter()
-        h = b"calib"
-        for _ in range(200_000):
-            h = hashlib.md5(h).digest()
-        info["calib_md5_200k_ms"] = round((_t.perf_counter() - t0) * 1000, 1)
-    except Exception:  # noqa: BLE001
-        pass
-    return info
 
 
 #: Byte budget for the one-line headline JSON. The driver keeps only the
@@ -205,107 +163,65 @@ def _current_round() -> int:
     return max(recorded, default=0) + 1
 
 
-#: Hard cap on fresh-panel size (the panel otherwise grows monotonically:
-#: prev panel ∪ movers ∪ slowest-5 every round) and the per-subprocess
-#: chunk size — each chunk is its own Spark session with its own 1200s
-#: timeout, so a hang costs one chunk, not the round's whole fresh column.
-_FRESH_PANEL_CAP = 30
+#: The fresh-subprocess panel, re-timed every round so the
+#: ``isolated_fresh`` column compares fresh against fresh across rounds.
+#: Fixed and sorted: every name is a registry query (pinned by
+#: tests/test_bench_fresh.py). The in-session isolated pass already
+#: re-times this run's slowest queries, so the panel needs no top-N term.
+FRESH_PANEL = (
+    "agg_bootstrap_ci",
+    "archive_tar_webdataset",
+    "dedup_components_keep_best",
+    "dedup_components_keeper",
+    "dedup_embedding_components",
+    "dedup_exact_substring_spans",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_simhash_multiplicity_pin",
+    "dedup_simhash_portable",
+    "events_littles_law_audit",
+    "graph_kcore_peel",
+    "graph_pagerank_parts",
+    "graph_sssp_bellman_ford",
+    "incremental_session_stitch",
+    "layout_sorted_files",
+    "multimodal_decode_mp4_frames",
+    "multimodal_decode_mp4_moov_tail",
+    "multimodal_image_phash",
+    "multimodal_mixed_routing",
+    "multimodal_pdf_catalog",
+    "multimodal_video_scene_cuts",
+    "report_sales_by_supplier",
+    "sim_ivf_topk",
+    "sim_lsh_topk",
+    "sim_pq_adc_topk",
+    "source_multiformat_roundtrip",
+    "ts_autocorrelation",
+    "ts_linear_interpolate_grid",
+    "udf_cogroup_asof_merge",
+)
+#: Names per fresh subprocess: each chunk is its own Spark session with
+#: its own 1200 s timeout, so a hang costs one chunk, not the column.
 _FRESH_CHUNK = 12
 
 
-def _fresh_isolated_movers(
-    isolated: dict[str, float], sf_dir: str, current_round: int, sf: float
-) -> tuple[dict[str, float], str | None]:
-    """Re-time a fresh-subprocess panel; returns (fresh_map, error).
-
-    Panel = the PREVIOUS same-SF round's entire ``isolated_fresh`` panel
-    (round-7 verdict task #3: re-measuring the same names every round
-    makes the round-over-round signal fresh-vs-fresh, the only
-    warmth-free comparison) ∪ movers ∪ the 5 slowest isolated queries
-    (a query whose prior reading was equally warmth-inflated never
-    crosses the mover threshold).
-
-    Mover detection is LIKE-FOR-LIKE: this round's in-session isolated
-    column vs the prior round's in-session isolated column, and names
-    already in the prior fresh panel are excluded — they are re-timed
-    unconditionally anyway, and comparing an in-session reading against
-    a prior FRESH baseline would manufacture a permanent ~2x "mover"
-    out of every warmth-sensitive panel query, eating the 12-slot mover
-    cap that exists for genuinely moved non-panel queries.
-
-    Bounded: the panel is capped at ``_FRESH_PANEL_CAP`` names (movers
-    first, then the prior panel slowest-first, then the 5 slowest;
-    anything cut is reported), and the subprocess work is CHUNKED at 12
-    names per fresh session with a per-chunk timeout — so one hung
-    chunk costs that chunk's readings, not the whole round's fresh
-    column, and panel growth can never outrun the timeout.
+def _fresh_times(sf_dir: str) -> tuple[dict[str, float], str | None]:
+    """Re-time ``FRESH_PANEL`` in fresh subprocess sessions, ``_FRESH_CHUNK``
+    names per session; returns (fresh_map, error).
 
     Failure modes are NOT silent (round-7 ADVICE): a chunk crash,
     timeout, or missing/bad FRESH_JSON line prints a one-line warning
     with the returncode and a stderr tail, and the error string is
     recorded under ``isolated_fresh_error`` in BENCH_DETAIL so a
-    dropped fresh reading is visible in the artifact."""
-    import glob as _glob
-    import re as _re
+    dropped fresh reading is visible in the artifact; the other chunks'
+    readings are kept."""
     import subprocess
 
-    prior: dict[str, float] = {}
-    prior_fresh: dict[str, float] = {}
-    candidates = sorted(
-        (int(m.group(1)), p)
-        for p in _glob.glob(os.path.join(_REPO_ROOT, "BENCH_DETAIL_r*.json"))
-        if (m := _re.search(r"BENCH_DETAIL_r(\d+)\.json$", p))
-        and int(m.group(1)) < current_round
-    )
-    for _n, path in reversed(candidates):
-        try:
-            with open(path) as f:
-                detail = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if detail.get("sf") == sf:  # only like-for-like SFs are comparable
-            prior = detail.get("isolated", {})
-            prior_fresh = detail.get("isolated_fresh", {}) or {}
-            break
-    if not prior and not prior_fresh:
-        return {}, None
-    # movers: like-for-like in-session vs in-session; prior-panel names
-    # are excluded (re-timed unconditionally below)
-    movers = [
-        (max(sec / prior[n], prior[n] / sec), n)
-        for n, sec in isolated.items()
-        if n in prior and n not in prior_fresh and prior[n] > 0 and sec > 0
-        and max(sec / prior[n], prior[n] / sec) > 1.3
-    ]
-    names = [n for _, n in sorted(movers, reverse=True)[:12]]
-    # The previous round's whole fresh panel, re-measured verbatim —
-    # membership is NOT conditioned on this round's isolated top-50
-    # (the fresh subprocess needs no in-session reading), only on the
-    # name still existing in the registry; otherwise a panel query
-    # that fell out of the concurrent top-50 would silently drop out
-    # of the fresh-vs-fresh series. Slowest-first so the cap (below)
-    # cuts the cheapest, least informative readings.
-    names += [
-        n
-        for n in sorted(prior_fresh, key=lambda n: -prior_fresh[n])
-        if n not in names and n in catalog.REGISTRY
-    ]
-    names += [
-        n
-        for n in sorted(isolated, key=lambda n: -isolated[n])[:5]
-        if n not in names
-    ]
-    dropped = names[_FRESH_PANEL_CAP:]
-    names = names[:_FRESH_PANEL_CAP]
-    if not names:
-        return {}, None
     prog = _FRESH_PROG.format(repo=_REPO_ROOT)
     fresh: dict[str, float] = {}
     errs: list[str] = []
-    if dropped:
-        errs.append(f"panel capped at {_FRESH_PANEL_CAP}; dropped: {','.join(dropped)}")
-    for i in range(0, len(names), _FRESH_CHUNK):
-        chunk = names[i:i + _FRESH_CHUNK]
+    for i in range(0, len(FRESH_PANEL), _FRESH_CHUNK):
+        chunk = FRESH_PANEL[i:i + _FRESH_CHUNK]
         try:
             res = subprocess.run(
                 [sys.executable, "-c", prog, sf_dir, ",".join(chunk)],
@@ -338,6 +254,9 @@ def main() -> None:
     threads = int(os.environ.get("SPARK_GRAFT_BENCH_THREADS", "24"))
     spark = build_spark(app_name="engine-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # Host-speed stamp across the whole run: steal ticks from here to the
+    # write, load average at the write, md5 calibration now.
+    host = HostStamp()
 
     # Warm the JVM/codegen paths and the Python-worker/Arrow path once
     # so per-query numbers aren't dominated by first-run classloading
@@ -378,7 +297,7 @@ def main() -> None:
     # the concurrent wave (round-4 verdict task #6): they are real
     # checkpointed micro-batch jobs / filesystem-commit protocols whose
     # latency under fair-sharing contention swung 5-10x run-to-run
-    # (26-28 s concurrent vs 3-10 s solo in BENCH_DETAIL_r04),
+    # (26-28 s concurrent vs 3-10 s solo in round 4's detail record),
     # drowning the round-over-round signal. Sequentially their cost is
     # fixed per query, so the recorded number is reproducible — and the
     # concurrent wave itself gets quieter with the checkpoint lanes out
@@ -403,9 +322,9 @@ def main() -> None:
     #     first streaming job of a session pays ~7 s of micro-batch
     #     engine + codegen init that belongs to the session, not to
     #     whichever query happens to run first;
-    # (b) state partitions sized to the phase's state volume: each
-    #     stateful operator creates one state store PER shuffle
-    #     partition, and every micro-batch commits a delta file per
+    # (b) state partitions (_SEQ_SHUFFLE) sized to the phase's state
+    #     volume: each stateful operator creates one state store PER
+    #     shuffle partition, and every micro-batch commits a delta file per
     #     store — at bench SF the state is a few thousand rows, so the
     #     batch suite's 32 partitions mean 32-128 checkpoint files per
     #     tiny query (stream_click_attribution_join: 9.9 s at 32 vs
@@ -414,7 +333,7 @@ def main() -> None:
     #     production deployment sizes this knob UP with state volume
     #     the same way this sizes it down.
     # (c) r10 (r9 verdict task #8): the phase overlaps a SMALL pool of
-    #     queries (default 3) instead of running strictly serially.
+    #     queries (_SEQ_THREADS) instead of running strictly serially.
     #     Every stream query stages its own source/checkpoint/output tmp
     #     dirs, so nothing conflicts; a 3-deep pool keeps per-query
     #     numbers reproducible (unlike the 24-thread wave that motivated
@@ -422,23 +341,14 @@ def main() -> None:
     #     queries' worth of micro-batch idle gaps end to end. Measured
     #     same-session A/B at sf0.1: serial 75.4 s vs 3-thread 29.5 s
     #     (2.6x), per-query times within ~1-2 s of their serial readings.
-    #     SPARK_GRAFT_SEQ_THREADS=1 restores the r5-r9 serial phase.
     warm0 = time.perf_counter()
     _stream_warmup(spark)
     seq_warmup = round(time.perf_counter() - warm0, 3)
     batch_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    seq_parts = int(os.environ.get("SPARK_GRAFT_SEQ_SHUFFLE", "8"))
-    seq_threads = int(os.environ.get("SPARK_GRAFT_SEQ_THREADS", "3"))
-    spark.conf.set("spark.sql.shuffle.partitions", str(seq_parts))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_SEQ_SHUFFLE))
     try:
-        if seq_threads <= 1:
-            for name in seq_names:
-                _timed(name)()
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=seq_threads) as seq_pool:
-                list(seq_pool.map(lambda n: _timed(n)(), seq_names))
+        with ThreadPoolExecutor(max_workers=_SEQ_THREADS) as seq_pool:
+            list(seq_pool.map(lambda n: _timed(n)(), seq_names))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", batch_parts)
     multimodal.release_decode_caches()
@@ -486,18 +396,16 @@ def main() -> None:
         multimodal.release_decode_caches()  # serial pass: safe per query
     isolated_pass_sec = round(time.perf_counter() - iso0, 3)
 
-    # Fresh-session re-measurement for movers (round-6 verdict task #3):
-    # the isolated pass runs in a session that just executed 368 queries,
-    # so it measures session-warmth state the ContextCleaner cannot
-    # reclaim as much as it measures the query (observed:
+    # Fresh-session re-measurement (round-6 verdict task #3): the
+    # isolated pass runs in a session that just executed every query, so
+    # it measures session-warmth state the ContextCleaner cannot reclaim
+    # as much as it measures the query (observed:
     # ts_linear_interpolate_grid 10.6 s in-session vs ~4.6 s fresh, with
     # identical code; a GC drain was tried and measured ineffective).
-    # Any isolated query that moved >1.3x against the PREVIOUS round's
-    # isolated column is re-timed in a fresh subprocess SparkSession and
-    # recorded under "isolated_fresh" — that column, not the in-session
-    # one, is the round-over-round regression signal for movers.
-    bench_round = _current_round()
-    isolated_fresh, fresh_error = _fresh_isolated_movers(isolated, sf_dir, bench_round, sf)
+    # FRESH_PANEL is re-timed in fresh subprocess SparkSessions and
+    # recorded under "isolated_fresh": the same names every round, so
+    # that column is the round-over-round fresh-vs-fresh signal.
+    isolated_fresh, fresh_error = _fresh_times(sf_dir)
     # Full per-query map -> side artifact; stdout gets one short line the
     # driver can parse even if it only keeps the tail of the stream
     # (round 1: the 6 KB queries map made the line unparseable).
@@ -520,8 +428,8 @@ def main() -> None:
         "concurrent_wall_sec": concurrent_wall,
         "sequential_phase_sec": seq_wall,
         "sequential_warmup_sec": seq_warmup,
-        "sequential_shuffle_partitions": seq_parts,
-        "sequential_threads": seq_threads,
+        "sequential_shuffle_partitions": _SEQ_SHUFFLE,
+        "sequential_threads": _SEQ_THREADS,
         "sequential_phase": seq_names,
         "sf": sf,
         "n_queries": len(timings),
@@ -530,13 +438,13 @@ def main() -> None:
         # 121 s headline vs 94-106 s repro spread was pure VM/session
         # speed; recording the machine context lets a future reader
         # dismiss headline noise without re-deriving it.
-        "sysinfo": _sysinfo(),
+        "sysinfo": host.finish(),
+        "round": _current_round(),
     }
     # Archive per round (round-3 verdict task #4): BENCH_DETAIL.json is
-    # the rolling "latest" pointer; BENCH_DETAIL_r{N}.json is immutable
-    # history so round-over-round per-query regressions stay
-    # attributable. Round labeling lives in _current_round().
-    detail["round"] = bench_round
+    # the rolling "latest" pointer; the per-round copy is the history
+    # that keeps round-over-round per-query regressions attributable.
+    # Round labeling lives in _current_round().
     for out_name in ("BENCH_DETAIL.json", f"BENCH_DETAIL_r{detail['round']:02d}.json"):
         with open(os.path.join(_REPO_ROOT, out_name), "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)

@@ -1,7 +1,7 @@
 """Round-10 streaming-phase profiler (r9 verdict task #8).
 
 Reproduces bench.py's sequential phase (stream warmup, shuffle
-partitions = SPARK_GRAFT_SEQ_SHUFFLE default 8, stream_*/maintenance_*
+partitions = bench._SEQ_SHUFFLE, stream_*/maintenance_*
 queries serially, noop sink) and records per-query seconds plus the
 phase wall, twice (cold pass + repeat pass) so the fixed-vs-marginal
 split is visible. Prints one JSON line.
@@ -41,10 +41,7 @@ def main() -> None:
     warm = round(time.perf_counter() - t0, 3)
 
     batch_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_SEQ_SHUFFLE", "8"),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(bench._SEQ_SHUFFLE))
     out: dict = {"tag": tag, "warmup_sec": warm, "passes": []}
     try:
         for _pass in range(2):

@@ -1,11 +1,10 @@
-"""Unit pins for bench.py's fresh-subprocess panel selection.
+"""Unit pins for bench.py's fresh-subprocess panel.
 
-The fresh panel is the round-over-round perf signal, and its selection
-logic has needed two behavioral fixes in two rounds (r7 ADVICE: silent
-failure modes; r8 battery: prior-panel names silently dropped when they
-fell out of the isolated top-50). These tests pin the three contracts
-without spawning Spark: panel composition, fresh-vs-fresh mover
-baseline, and loud failure reporting.
+The fresh panel is the round-over-round perf signal: a fixed list
+(``bench.FRESH_PANEL``) re-timed in fresh sessions every round, chunked
+so one crashed or hung session costs only its chunk. These tests pin the
+panel, its independence from earlier detail records, and loud failure
+reporting, without spawning Spark.
 """
 
 from __future__ import annotations
@@ -18,14 +17,6 @@ import pytest
 import bench
 from aws_glue_pyspark_incrementality_and_parallelism_spark.plans.catalog import REGISTRY
 
-# real registry names (the panel filters against catalog.REGISTRY)
-_NAMES = sorted(REGISTRY)[:8]
-
-
-def _write_prior(tmp_path, *, isolated, isolated_fresh=None, sf=0.1, rnd=7):
-    detail = {"sf": sf, "isolated": isolated, "isolated_fresh": isolated_fresh or {}}
-    (tmp_path / f"BENCH_DETAIL_r{rnd:02d}.json").write_text(json.dumps(detail))
-
 
 @pytest.fixture()
 def repo_root(tmp_path, monkeypatch):
@@ -33,120 +24,62 @@ def repo_root(tmp_path, monkeypatch):
     return tmp_path
 
 
-def _capture_subprocess(monkeypatch, captured, stdout="FRESH_JSON:{}", rc=0, stderr=""):
+def _fake_run(monkeypatch, sent, fail_call=None, stdout="", rc=1, stderr=""):
+    """Stub ``subprocess.run``: records each chunk's names in ``sent``
+    and answers with a reading per name, except call ``fail_call``
+    (1-based; every call when ``"all"``), which answers with
+    ``stdout``/``rc``/``stderr``."""
+
     def fake_run(argv, **kw):
         # argv = [python, -c, prog, sf_dir, comma-joined-names]
-        captured["names"] = argv[4].split(",")
-
-        class R:
-            returncode = rc
-
-        R.stdout = stdout
-        R.stderr = stderr
-        return R
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-
-
-def test_prior_fresh_panel_remeasured_even_outside_isolated_top50(repo_root, monkeypatch):
-    """Every name in the previous round's fresh panel is re-timed even
-    when it is absent from this round's isolated column (the r8 battery
-    found 4 panel names silently dropped by an `in isolated` guard)."""
-    a, b, c = _NAMES[:3]
-    _write_prior(repo_root, isolated={a: 1.0}, isolated_fresh={a: 1.0, b: 2.0, c: 3.0})
-    captured = {}
-    _capture_subprocess(
-        monkeypatch, captured, stdout=f'FRESH_JSON:{json.dumps({a: 1.0})}'
-    )
-    fresh, err = bench._fresh_isolated_movers({a: 1.0}, "/tmp/sf", 8, 0.1)
-    assert err is None
-    assert set(captured["names"]) >= {a, b, c}, "prior fresh panel not fully re-measured"
-
-
-def test_unregistered_prior_panel_names_are_skipped(repo_root, monkeypatch):
-    a = _NAMES[0]
-    _write_prior(repo_root, isolated={a: 1.0}, isolated_fresh={a: 1.0, "gone_query": 9.9})
-    captured = {}
-    _capture_subprocess(monkeypatch, captured)
-    bench._fresh_isolated_movers({a: 1.0}, "/tmp/sf", 8, 0.1)
-    assert "gone_query" not in captured["names"]
-
-
-def test_prior_panel_names_never_consume_mover_slots(repo_root, monkeypatch):
-    """Mover detection is like-for-like (in-session vs prior in-session)
-    and EXCLUDES prior-panel names: a warmth-sensitive panel query would
-    otherwise read as a permanent ~2x 'mover' every round, eating the
-    12-slot mover cap meant for genuinely moved non-panel queries. The
-    panel query is re-timed anyway via the panel rule."""
-    a, b = _NAMES[:2]
-    # a: in prior fresh panel, in-session moved 10.0 -> 5.0 (ratio 2)
-    # b: not in panel, moved 1.0 -> 4.0 -> the only true mover
-    _write_prior(repo_root, isolated={a: 10.0, b: 1.0}, isolated_fresh={a: 5.0})
-    captured = {}
-    _capture_subprocess(monkeypatch, captured)
-    bench._fresh_isolated_movers({a: 5.0, b: 4.0}, "/tmp/sf", 8, 0.1)
-    names = captured["names"]
-    # movers lead the list: b (true mover) before a (panel re-measure)
-    assert names.index(b) < names.index(a)
-
-
-def test_panel_capped_with_dropped_names_reported(repo_root, monkeypatch):
-    cap, chunk = bench._FRESH_PANEL_CAP, bench._FRESH_CHUNK
-    pool = sorted(REGISTRY)[: cap + 5]
-    _write_prior(
-        repo_root,
-        isolated={n: 1.0 for n in pool},
-        isolated_fresh={n: float(i + 1) for i, n in enumerate(pool)},
-    )
-    chunks = []
-
-    def fake_run(argv, **kw):
-        chunks.append(argv[4].split(","))
-
-        class R:
-            returncode = 0
-            stdout = "FRESH_JSON:" + json.dumps({n: 1.0 for n in argv[4].split(",")})
-            stderr = ""
-
-        return R()
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    fresh, err = bench._fresh_isolated_movers({pool[0]: 1.0}, "/tmp/sf", 8, 0.1)
-    ran = [n for c in chunks for n in c]
-    assert len(ran) == cap, "panel not capped"
-    assert all(len(c) <= chunk for c in chunks), "chunk size exceeded"
-    assert err is not None and "panel capped" in err and "dropped:" in err
-    assert len(fresh) == cap
-
-
-def test_chunk_failure_keeps_other_chunks_partial_results(repo_root, monkeypatch):
-    chunk = bench._FRESH_CHUNK
-    pool = sorted(REGISTRY)[: chunk + 2]  # two chunks
-    _write_prior(
-        repo_root,
-        isolated={n: 1.0 for n in pool},
-        isolated_fresh={n: float(i + 1) for i, n in enumerate(pool)},
-    )
-    calls = {"n": 0}
-
-    def fake_run(argv, **kw):
-        calls["n"] += 1
         names = argv[4].split(",")
+        sent.append(names)
 
         class R:
             returncode = 0
             stdout = "FRESH_JSON:" + json.dumps({n: 1.0 for n in names})
             stderr = ""
 
-        if calls["n"] == 2:  # second chunk crashes
-            R.returncode = 1
-            R.stdout = ""
-            R.stderr = "boom"
+        if fail_call in ("all", len(sent)):
+            R.returncode, R.stdout, R.stderr = rc, stdout, stderr
         return R()
 
     monkeypatch.setattr(subprocess, "run", fake_run)
-    fresh, err = bench._fresh_isolated_movers({pool[0]: 1.0}, "/tmp/sf", 8, 0.1)
-    assert len(fresh) == chunk, "first chunk's readings must survive"
+
+
+def test_panel_names_are_registered_and_unique():
+    assert set(bench.FRESH_PANEL) <= set(REGISTRY)
+    assert len(set(bench.FRESH_PANEL)) == len(bench.FRESH_PANEL)
+
+
+def test_panel_ignores_earlier_detail_records(repo_root, monkeypatch):
+    """The same names go out, in the same order, with or without earlier
+    BENCH_DETAIL_r*.json files: the panel is not derived from history."""
+    without, with_prior = [], []
+    _fake_run(monkeypatch, without)
+    fresh, err = bench._fresh_times("/tmp/sf")
+    assert err is None and set(fresh) == set(bench.FRESH_PANEL)
+
+    other = sorted(set(REGISTRY) - set(bench.FRESH_PANEL))[:3]
+    detail = {"sf": 0.1, "isolated": {n: 9.0 for n in other},
+              "isolated_fresh": {n: 1.0 for n in other}}
+    (repo_root / "BENCH_DETAIL_r07.json").write_text(json.dumps(detail))
+    _fake_run(monkeypatch, with_prior)
+    bench._fresh_times("/tmp/sf")
+
+    assert with_prior == without
+    assert [n for c in without for n in c] == list(bench.FRESH_PANEL)
+    assert all(len(c) <= bench._FRESH_CHUNK for c in without)
+
+
+def test_chunk_failure_keeps_other_chunks_partial_results(repo_root, monkeypatch):
+    sent = []
+    _fake_run(monkeypatch, sent, fail_call=2, stderr="boom")  # second chunk crashes
+    fresh, err = bench._fresh_times("/tmp/sf")
+    assert len(sent) > 2
+    assert set(fresh) == set(bench.FRESH_PANEL) - set(sent[1]), (
+        "the other chunks' readings must survive"
+    )
     assert err is not None and "rc=1" in err and "boom" in err
 
 
@@ -154,24 +87,9 @@ def test_failure_is_reported_not_swallowed(repo_root, monkeypatch):
     """A crashed fresh subprocess (no FRESH_JSON line) returns an error
     string carrying the returncode and stderr tail — never a silent {}
     (r7 ADVICE), and the caller records it in BENCH_DETAIL."""
-    a = _NAMES[0]
-    _write_prior(repo_root, isolated={a: 1.0}, isolated_fresh={a: 1.0})
-    captured = {}
-    _capture_subprocess(
-        monkeypatch, captured, stdout="", rc=137, stderr="x\ny\njava.lang.OutOfMemoryError"
+    _fake_run(
+        monkeypatch, [], fail_call="all", rc=137, stderr="x\ny\njava.lang.OutOfMemoryError"
     )
-    fresh, err = bench._fresh_isolated_movers({a: 5.0}, "/tmp/sf", 8, 0.1)
+    fresh, err = bench._fresh_times("/tmp/sf")
     assert fresh == {}
     assert err is not None and "rc=137" in err and "OutOfMemoryError" in err
-
-
-def test_no_prior_detail_is_a_clean_noop(repo_root):
-    fresh, err = bench._fresh_isolated_movers({_NAMES[0]: 1.0}, "/tmp/sf", 8, 0.1)
-    assert (fresh, err) == ({}, None)
-
-
-def test_different_sf_prior_is_ignored(repo_root, monkeypatch):
-    a = _NAMES[0]
-    _write_prior(repo_root, isolated={a: 1.0}, isolated_fresh={a: 1.0}, sf=0.001)
-    fresh, err = bench._fresh_isolated_movers({a: 9.0}, "/tmp/sf", 8, 0.1)
-    assert (fresh, err) == ({}, None)

@@ -103,6 +103,12 @@ def test_per_source_state_isolated(tmp_path):
     assert store.get("a") is None and store.get("b") == 7
 
 
+def test_reset_under_missing_directory(tmp_path):
+    store = BookmarkStore(str(tmp_path / "not_yet" / "bm.json"))
+    store.reset("a")
+    assert store.get("a") is None
+
+
 def test_incremental_aggregate_maintenance(spark):
     """Report(old facts) ⊕ Report(new facts) == Report(all facts): the
     standing report is maintained from increment-only aggregation,
