@@ -7,7 +7,7 @@ alexriley7/AWS-Glue-PySpark-Incrementality-and-Parallelism
 * incremental (bookmark/high-water-mark) scans     -> sources.incremental
 * multi-way equi joins + grouped aggregate reports -> operators.reports
 * concurrent report fan-out under FAIR scheduling  -> parallel
-* parquet/JDBC-style sources and sinks             -> sources.io
+* parquet sources and sinks, CSV/JSON/ORC reads    -> sources.io
 
 plus large-scale training-data-pipeline extensions (dedup, similarity
 search, multimodal columns, text analysis) under ``operators/``.

@@ -11,8 +11,8 @@ this engine unchanged in shape:
 
 * the "catalog" is a directory of parquet tables (TESTDATA layout),
 * ``jobBookmarkKeys`` + ``jobBookmarkKeysSortOrder`` additional_options
-  are honored through the real bookmark store
-  (sources.incremental.BookmarkStore) — filter > HWM on read, commit
+  are honored through the same bookmark path ``run_etl`` uses
+  (sources.incremental.incremental_read) — filter > HWM on read, commit
   via ``commit_bookmarks()`` after the sink succeeds (the Job.commit
   the reference forgot, Bug B10),
 * every transform is a thin lazy DataFrame wrapper: no row-level
@@ -46,7 +46,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.incremental import BookmarkStore
+from .sources.incremental import BookmarkStore, IncrementalBatch, incremental_read
 from .sources.io import load_table, write_parquet
 
 
@@ -220,29 +220,14 @@ class _DynamicFrameReader:
             if order != "asc":
                 raise ValueError("only asc bookmark order is supported (as in the reference)")
             ctx_key = transformation_ctx or table_name
-            from pyspark.sql import functions as F
-
-            from .sources.incremental import composite_gt
-
-            hwm = self._ctx.bookmarks.get(ctx_key)
-            if hwm is not None:
-                if len(keys) == 1:
-                    df = df.filter(F.col(keys[0]) > F.lit(hwm))
-                else:
-                    # composite jobBookmarkKeys: lexicographic ordering,
-                    # exactly Glue's multi-key bookmark semantic
-                    df = df.filter(
-                        composite_gt(
-                            list(keys),
-                            list(hwm) if isinstance(hwm, (list, tuple)) else hwm,
-                        )
-                    )
-            if len(keys) == 1:
-                agg = df.select(F.max(keys[0]).alias("m"))
-            else:
-                agg = df.select(F.max(F.struct(*keys)).alias("m"))
+            # composite jobBookmarkKeys order lexicographically, exactly
+            # Glue's multi-key bookmark semantic
+            batch = incremental_read(
+                df, keys[0] if len(keys) == 1 else list(keys), self._ctx.bookmarks, ctx_key
+            )
+            df = batch.df
             with self._ctx._lock:
-                self._ctx._pending[ctx_key] = (keys, agg)
+                self._ctx._pending[ctx_key] = batch
         return DynamicFrameShim(df, self._ctx, table_name)
 
 
@@ -282,7 +267,7 @@ class GlueCompatContext:
         self.bookmarks = (
             BookmarkStore(f"{output_dir}/_bookmarks.json") if job_bookmarks else None
         )
-        self._pending: dict[str, tuple[str, DataFrame]] = {}
+        self._pending: dict[str, IncrementalBatch] = {}
         self._lock = threading.Lock()
         self.create_dynamic_frame = _DynamicFrameReader(self)
         self.write_dynamic_frame = _DynamicFrameWriter(self)
@@ -301,8 +286,5 @@ class GlueCompatContext:
             return
         with self._lock:
             pending, self._pending = self._pending, {}
-        for ctx_key, (keys, agg) in pending.items():
-            row = agg.collect()[0]
-            if row.m is not None:
-                hwm = list(row.m) if not isinstance(keys, str) and len(keys) > 1 else row.m
-                self.bookmarks.commit(ctx_key, hwm)
+        for batch in pending.values():
+            batch.commit()

@@ -50,25 +50,6 @@ def _tokens(text: Column) -> Column:
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
-def _seeded_min(shingles: Column, seed: int) -> Column:
-    """MinHash slot: min over shingles of xxhash64 prefixed with the
-    permutation seed. One-arg lambda on purpose — PySpark maps lambda
-    arity onto the HOF signature, so a 2-arg lambda would bind the
-    second parameter to the array index, not a closure default."""
-    prefix = f"{seed}:"
-    return F.array_min(F.transform(shingles, lambda s: F.xxhash64(F.concat(F.lit(prefix), s))))
-
-
-def minhash_signature(shingles: Column, k: int = MINHASH_K) -> Column:
-    """k-permutation MinHash as an array<long>.
-
-    Permutation i is xxhash64 seeded by prefixing the shingle with the
-    permutation index — all JVM-side built-ins, one pass per row, no
-    shuffle. (MinHash per Broder '97; banding per MMDS ch.3.)
-    """
-    return F.array(*[_seeded_min(shingles, i) for i in range(k)])
-
-
 def shingle_rows(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """Exploded (doc_id, shingle) rows via explode(sequence) + slice +
     array_join — all codegen expressions (no array lambdas, which run
@@ -182,24 +163,22 @@ def minhash_candidate_pairs(
     docs: DataFrame,
     bucket_cap: int = LSH_BUCKET_CAP,
     materialize: bool = True,
-    with_sets: bool = True,
 ) -> DataFrame:
-    """LSH candidate pairs: docs sharing at least one (band, band-hash)
-    bucket. The only shuffles are the doc-id hash-aggregate and the
-    band-hash join — this is the 100 TB near-dup path.
+    """LSH candidate pairs (doc_a < doc_b): docs sharing at least one
+    (band, band-hash) bucket. The only shuffles are the doc-id
+    hash-aggregate and the band-hash join — this is the 100 TB near-dup
+    path. Candidates are unverified; ``q_dedup_minhash_lsh`` verifies
+    them by joining the exact pairs of ``exact_near_dup_pairs``.
 
     Shape matters here: shingles are EXPLODED once, then the 32 MinHash
     slots are 32 ``min()`` columns of one hash-aggregate. That keeps the
-    whole signature computation inside whole-stage codegen — the
-    array-lambda formulation (``minhash_signature``) is semantically
-    identical but runs interpreted (HOFs have no codegen) and is ~100×
-    slower at corpus scale.
+    whole signature computation inside whole-stage codegen — a
+    per-slot array-lambda formulation (``array_min(transform(...))``)
+    is semantically identical but runs interpreted (HOFs have no
+    codegen) and is ~100× slower at corpus scale.
     """
     sh = shingle_rows(docs)
-    # 32 plain min() columns -> pure codegen HashAggregate. The shingle
-    # sets needed for verification are NOT collected here (collect_set
-    # would force the slower object-hash aggregate for every doc); they
-    # are joined back below for the few surviving candidates only.
+    # 32 plain min() columns -> pure codegen HashAggregate.
     #
     # Permutations re-mix ONE base string hash: m_i = xxhash64(h ⊕ c_i)
     # over the 8-byte long, instead of K string-concat hashes per
@@ -277,53 +256,14 @@ def minhash_candidate_pairs(
         .select(F.col("prev_id").alias("doc_a"), F.col("doc_id").alias("doc_b"))
     )
     cands = pairs_all.unionByName(pairs_chain).dropDuplicates(["doc_a", "doc_b"])
-    # Shingle SETS only for docs that appear in a candidate pair: the
-    # semi-join prunes DOCS (before tokenize/explode/window, not after),
-    # so the second shingling pass runs over the few surviving
-    # candidates instead of the whole corpus, then one small collect_set
-    # aggregate.
-    # The candidate relation is referenced three times below (id list +
-    # both set joins); without truncation the whole signature+band-join
-    # pipeline would re-execute per reference. It is tiny (pairs that
-    # share a band), so materialize it once — ~3× faster end-to-end.
-    # (materialize=False keeps the full lineage visible for plan-shape
-    # tests, which pin the band equi-join skeleton the checkpoint hides.)
+    # The candidate relation is tiny (pairs that share a band), so it is
+    # pinned once: a caller that reads it more than once does not re-run
+    # the signature + band-join pipeline. (materialize=False keeps the
+    # full lineage visible for plan-shape tests, which pin the band
+    # equi-join skeleton the checkpoint hides.)
     if materialize:
         cands = cands.transform(pin)
-    if not with_sets:
-        # r10: a caller that verifies candidates against an exact pair
-        # relation it already computes (q_dedup_minhash_lsh joins the
-        # ground-truth jaccard pairs) needs no shingle sets — skip the
-        # second shingling pass entirely.
-        return cands
-    cand_ids = cands.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id")).distinct()
-    cand_sets = (
-        shingle_rows(docs.join(cand_ids, "doc_id", "left_semi"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("s").alias("shingles"))
-    )
-    sa = cand_sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("shingles_a"))
-    sb = cand_sets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("shingles_b"))
-    return cands.join(sa, "doc_a").join(sb, "doc_b").select(
-        "doc_a", "doc_b", "shingles_a", "shingles_b"
-    )
-
-
-def minhash_verified_pairs(docs: DataFrame) -> DataFrame:
-    """E2 scale path: MinHash(32) + 8×4 banding → candidate pairs →
-    exact shingle-Jaccard verification ≥ 0.5. The registered query
-    ``dedup_minhash_lsh`` wraps this in a driver-checkable recall
-    surface; the banding algebra is value-checked end-to-end in the
-    portable twin ``dedup_minhash_portable``."""
-    cands = minhash_candidate_pairs(docs)
-    inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
-    union = F.size(F.array_union("shingles_a", "shingles_b"))
-    # try_divide: two all-NULL/empty documents have an empty shingle
-    # union — jaccard undefined (NULL, filtered out), not an ANSI abort
-    jac = F.try_divide(inter, union)
-    return cands.filter(jac >= 0.5).select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    )
+    return cands
 
 
 def exact_near_dup_pairs(docs: DataFrame) -> DataFrame:
@@ -425,12 +365,13 @@ _MINHASH_SUMMARY_ORACLE = """
 @query("dedup_minhash_lsh", oracle=_MINHASH_SUMMARY_ORACLE)
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH with a deterministic driver surface: runs the full
-    xxhash64 scale path (``minhash_verified_pairs``) AND the exact
-    inverted-index ground truth in one job, then emits one row —
-    ``n_true`` (exact count of Jaccard ≥ 0.5 pairs, oracle-exact),
-    ``recall_ok`` (LSH found ≥ MINHASH_RECALL_FLOOR of them) and
-    ``precision_ok`` (every LSH-verified pair is a true pair — exact
-    verification makes this structural). The approx-operator oracle
+    xxhash64 candidate path (``minhash_candidate_pairs``) AND the exact
+    inverted-index ground truth (``exact_near_dup_pairs``) in one job,
+    verifies each candidate by joining it to the ground truth, then
+    emits one row — ``n_true`` (exact count of Jaccard ≥ 0.5 pairs,
+    oracle-exact), ``recall_ok`` (LSH found ≥ MINHASH_RECALL_FLOOR of
+    them) and ``precision_ok`` (every LSH-verified pair is a true pair —
+    exact verification makes this structural). The approx-operator oracle
     pattern: hash internals stay unconstrained, the invariants are
     pinned. Pair-level values are oracled in
     ``dedup_minhash_portable``."""
@@ -440,17 +381,10 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster parallelism instead of one scan task each; the two
     # branches share the one fan-out exchange via ReuseExchange.
     docs = fan_out_compute(load_table(spark, sf_dir, "documents"), "doc_id")
-    # r10 (r9 verdict task #4): the LSH branch's per-candidate exact
-    # verification IS membership in the exact ground-truth relation this
-    # query computes anyway — for any candidate pair, the old
-    # size(array_intersect)/size(array_union) over collect_set shingle
-    # sets equals n_common/(na+nb-n_common) over distinct shingle rows
-    # term for term (collect_set drops exactly the NULL shingles the
-    # row form never joins on, and a pair with an empty shingle union
-    # was dropped by try_divide's NULL just as an absent inter row drops
-    # it here). So verified-found = candidates ∩ truth, and the second
-    # shingling pass (semi-join + two collect_set pipelines + array
-    # intersect/union per pair) disappears from the plan.
+    # A candidate's exact verification IS membership in the exact
+    # ground-truth relation this query computes anyway (Jaccard over
+    # distinct shingle rows), so verified-found = candidates ∩ truth
+    # and no second shingling pass is needed.
     # (Measured, r10: a lazy localCheckpoint of truth_pairs — RDD-level
     # sharing instead of the duplicated subtree — was ~35% SLOWER
     # end-to-end: AQE stage reuse already dedups the identical exchange
@@ -460,7 +394,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth_pairs = exact_near_dup_pairs(docs)
     truth = truth_pairs.withColumn("t", F.lit(1))
     found = (
-        minhash_candidate_pairs(docs, with_sets=False)
+        minhash_candidate_pairs(docs)
         .join(truth_pairs, ["doc_a", "doc_b"])
         .withColumn("f", F.lit(1))
     )
@@ -475,31 +409,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_true",
         (F.col("n_hit") >= F.lit(MINHASH_RECALL_FLOOR) * F.col("n_true")).alias("recall_ok"),
         (F.col("n_extra") == 0).alias("precision_ok"),
-    )
-
-
-def winnow_fingerprints(
-    docs: DataFrame, k: int = 4, window: int = 5
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer et al., SIGMOD '03 —
-    the MOSS algorithm): hash every k-token shingle, slide a window of
-    ``window`` consecutive hashes, keep each window's minimum. Guarantees
-    any shared run of ≥ k+window-1 tokens between two docs shares a
-    fingerprint, with output ~1/window of the shingle count.
-
-    Pure codegen: slice-based shingles (zero-shuffle map stage, see
-    ``shingle_rows``) → xxhash64 → min over a rows-frame → distinct.
-    The ONLY shuffle is the by-doc sort the rolling-min window needs —
-    that one is inherent to winnowing (consecutive hash positions must
-    colocate in order); fingerprints stay (doc_id, fp) rows —
-    join-ready for plagiarism/overlap detection at corpus scale."""
-    from pyspark.sql.window import Window as W
-
-    grams = _winnow_grams(docs, k)
-    frame = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, window - 1)
-    return (
-        grams.select("doc_id", F.min("h").over(frame).alias("fp"))
-        .distinct()
     )
 
 
@@ -536,8 +445,7 @@ def q_dedup_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions. The surface emits the exact position count (P = tokens −
     k + 1, oracle-computable) and pins those structural bounds; the
     xxhash64-specific fingerprint VALUES are oracled bit-for-bit in the
-    portable twin ``dedup_winnow_portable``, and the shared-run
-    containment guarantee is asserted in pytest on planted overlaps."""
+    portable twin ``dedup_winnow_portable``."""
     from pyspark.sql.window import Window as W
 
     k, w = 4, 5

@@ -121,7 +121,8 @@ def write_range_sorted(
     One range-exchange shuffle (sampled boundaries, skew-resistant) +
     a spill-safe local sort; at 100 TB this is the standard "sorted
     table" materialization, and ``num_files`` is sized from total
-    bytes / target file size (see sources.io.compact_parquet_dir)."""
+    bytes / target file size (as ``maintenance.compact_parquet`` sizes
+    its outputs)."""
     (
         df.repartitionByRange(num_files, *sort_cols)
         .sortWithinPartitions(*sort_cols)

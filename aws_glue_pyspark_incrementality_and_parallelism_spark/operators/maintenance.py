@@ -26,6 +26,7 @@ incremental appends.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import shutil
@@ -33,8 +34,9 @@ import tempfile
 import uuid
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..plans.registry import query
 from ..session import pin
@@ -87,6 +89,72 @@ def compact_parquet(
         "files_after": len(parquet_files(target_dir)),
         "bytes_total": bytes_total,
     }
+
+
+def _cents() -> Column:
+    """``o_totalprice`` in exact cents, rounded half up: the checksum
+    column the orders-based maintenance oracles recompute in DuckDB as
+    ``CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)``."""
+    return F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+
+
+def _three_commit_orders(
+    spark: SparkSession, sf_dir: str, prefix: str
+) -> tuple[str, str, DataFrame, DataFrame]:
+    """The commit-log fixture shared by the replay, time-travel and
+    vacuum queries: ``orders`` written as three logged commits under a
+    fresh temp root.
+
+    (0) the low-price half (o_totalprice <= 300000) as 4 files;
+    (1) the high-price half as 1 file;
+    (2) a compaction that REMOVES the 4 version-0 files and adds 1
+        rewritten file with the same content. The removed files stay on
+        disk, so listing the directory naively would double-count.
+
+    Each commit is one ``_log/{v:05d}.json`` file of JSON lines
+    ``{"action": "add"|"remove", "path": ..., "v": v}``. Returns
+    ``(data_dir, log_dir, orders, low)``."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    data, logdir = os.path.join(root, "data"), os.path.join(root, "_log")
+    os.makedirs(data), os.makedirs(logdir)
+    orders = load_table(spark, sf_dir, "orders")
+
+    def _files(subdir: str) -> list[str]:
+        return sorted(parquet_files(os.path.join(data, subdir)))
+
+    def _commit(version: int, adds: list[str], removes: list[str]) -> None:
+        with open(os.path.join(logdir, f"{version:05d}.json"), "w") as fh:
+            for action, paths in (("add", adds), ("remove", removes)):
+                for p in paths:
+                    fh.write(json.dumps({"action": action, "path": p, "v": version}) + "\n")
+
+    low = orders.filter(F.col("o_totalprice") <= 300000)
+    high = orders.filter(F.col("o_totalprice") > 300000)
+    low.repartition(4).write.mode("overwrite").parquet(os.path.join(data, "v0"))
+    _commit(0, _files("v0"), [])
+    high.coalesce(1).write.mode("overwrite").parquet(os.path.join(data, "v1"))
+    _commit(1, _files("v1"), [])
+    spark.read.parquet(os.path.join(data, "v0")).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(data, "v2"))
+    _commit(2, _files("v2"), _files("v0"))
+    return data, logdir, orders, low
+
+
+def _live_files(log: DataFrame, as_of: int | None = None) -> list[str]:
+    """Replay a commit log (``_three_commit_orders``' format): the paths
+    whose last action at a version <= ``as_of`` (default: all) is an
+    add. One last-action-per-path window; at equal versions a remove
+    wins over an add."""
+    if as_of is not None:
+        log = log.filter(F.col("v") <= as_of)
+    last = log.withColumn(
+        "rn",
+        F.row_number().over(
+            Window.partitionBy("path").orderBy(F.desc("v"), F.desc("action"))
+        ),
+    ).filter((F.col("rn") == 1) & (F.col("action") == "add"))
+    return [r["path"] for r in last.select("path").collect()]
 
 
 @query(
@@ -418,13 +486,11 @@ def maintenance_commit_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     the log to resolve the live file set, which is what makes commits
     atomic and time travel possible.
 
-    Three commits are written: (0) initial load of the low-price half
-    as 4 files, (1) append of the high-price half, (2) compaction that
-    REMOVES the 4 initial files and adds 1 rewritten file with the same
-    content — so the physical directory holds dead files and listing it
-    naively would double-count. The reader replays the log with one
-    last-action-per-path window, scans ONLY live files, and the oracle
-    adjudicates that the snapshot equals the full source table exactly
+    The three commits of ``_three_commit_orders`` are written; the
+    third is a compaction whose removed files stay on disk, so listing
+    the directory naively would double-count. The reader replays the
+    log with one last-action-per-path window (``_live_files``), scans
+    ONLY live files, and the oracle adjudicates that the snapshot equals the full source table exactly
     (row count + exact cents checksum, plus a both-direction anti-join
     equality check). ``removed_files_invisible`` pins that dead files
     exist on disk yet contribute no rows.
@@ -434,48 +500,8 @@ def maintenance_commit_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     add/remove is what partition overwrite, compaction, and DELETE all
     compile to.
     """
-    import json as _json
-
-    root = tempfile.mkdtemp(prefix="sgq_txlog_")
-    data, logdir = os.path.join(root, "data"), os.path.join(root, "_log")
-    os.makedirs(data), os.makedirs(logdir)
-    orders = load_table(spark, sf_dir, "orders")
-
-    def _files(subdir: str) -> list[str]:
-        return sorted(parquet_files(os.path.join(data, subdir)))
-
-    def _commit(version: int, adds: list[str], removes: list[str]) -> None:
-        with open(os.path.join(logdir, f"{version:05d}.json"), "w") as fh:
-            for p in adds:
-                fh.write(_json.dumps({"action": "add", "path": p, "v": version}) + "\n")
-            for p in removes:
-                fh.write(_json.dumps({"action": "remove", "path": p, "v": version}) + "\n")
-
-    low = orders.filter(F.col("o_totalprice") <= 300000)
-    high = orders.filter(F.col("o_totalprice") > 300000)
-    low.repartition(4).write.mode("overwrite").parquet(os.path.join(data, "v0"))
-    _commit(0, _files("v0"), [])
-    high.write.mode("overwrite").parquet(os.path.join(data, "v1"))
-    _commit(1, _files("v1"), [])
-    # compaction: rewrite the 4 initial files as 1; old files stay on disk
-    spark.read.parquet(os.path.join(data, "v0")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(data, "v2"))
-    _commit(2, _files("v2"), _files("v0"))
-
-    from pyspark.sql.window import Window
-
-    log = spark.read.json(os.path.join(logdir, "*.json"))
-    last = (
-        log.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("path").orderBy(F.desc("v"), F.desc("action"))
-            ),
-        )
-        .filter((F.col("rn") == 1) & (F.col("action") == "add"))
-    )
-    live_files = [r["path"] for r in last.select("path").collect()]
+    data, logdir, orders, _low = _three_commit_orders(spark, sf_dir, "sgq_txlog_")
+    live_files = _live_files(spark.read.json(os.path.join(logdir, "*.json")))
     n_commits = len(os.listdir(logdir))
 
     snapshot = spark.read.parquet(*live_files)
@@ -501,9 +527,7 @@ def maintenance_commit_log_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     dead_on_disk = set(parquet_files(data)) - set(live_files)
     return snapshot.agg(
         F.count("*").alias("n_rows"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_totalprice_cents"),
+        F.sum(_cents()).cast("bigint").alias("sum_totalprice_cents"),
     ).select(
         F.lit(n_commits).alias("n_commits"),
         "n_rows",
@@ -535,8 +559,7 @@ def maintenance_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel over the commit log — the read-side dividend of
     ``maintenance_commit_log_replay``'s mechanism: a snapshot AS OF
     version v is the log replayed with actions ``v' <= v`` only.  The
-    same three commits are written (initial low-price load as 4 files,
-    high-price append, compaction replacing the 4 files with 1); each
+    same three commits are written (``_three_commit_orders``); each
     historical snapshot is then resolved and scanned, and the oracle
     pins version 0 == the low-price half, version 1 == the full table,
     and version 2 == the full table still (compaction rewrote layout,
@@ -547,55 +570,13 @@ def maintenance_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is how reproducible training runs pin the exact corpus
     snapshot a model saw, independent of later ingest/compaction.
     """
-    import json as _json
-
-    root = tempfile.mkdtemp(prefix="sgq_timetravel_")
-    data, logdir = os.path.join(root, "data"), os.path.join(root, "_log")
-    os.makedirs(data), os.makedirs(logdir)
-    orders = load_table(spark, sf_dir, "orders")
-
-    def _files(subdir: str) -> list[str]:
-        return sorted(parquet_files(os.path.join(data, subdir)))
-
-    def _commit(version: int, adds: list[str], removes: list[str]) -> None:
-        with open(os.path.join(logdir, f"{version:05d}.json"), "w") as fh:
-            for p in adds:
-                fh.write(_json.dumps({"action": "add", "path": p, "v": version}) + "\n")
-            for p in removes:
-                fh.write(_json.dumps({"action": "remove", "path": p, "v": version}) + "\n")
-
-    low = orders.filter(F.col("o_totalprice") <= 300000)
-    high = orders.filter(F.col("o_totalprice") > 300000)
-    low.repartition(4).write.mode("overwrite").parquet(os.path.join(data, "v0"))
-    _commit(0, _files("v0"), [])
-    high.write.mode("overwrite").parquet(os.path.join(data, "v1"))
-    _commit(1, _files("v1"), [])
-    spark.read.parquet(os.path.join(data, "v0")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(data, "v2"))
-    _commit(2, _files("v2"), _files("v0"))
-
-    from pyspark.sql.window import Window
-
+    _data, logdir, _orders, _low = _three_commit_orders(spark, sf_dir, "sgq_timetravel_")
     log = spark.read.json(os.path.join(logdir, "*.json"))
     out = None
     for version in (0, 1, 2):
-        last = (
-            log.filter(F.col("v") <= version)
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("path").orderBy(F.desc("v"), F.desc("action"))
-                ),
-            )
-            .filter((F.col("rn") == 1) & (F.col("action") == "add"))
-        )
-        live_files = [r["path"] for r in last.select("path").collect()]
-        snap = spark.read.parquet(*live_files).agg(
+        snap = spark.read.parquet(*_live_files(log, as_of=version)).agg(
             F.count("*").alias("n_rows"),
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_totalprice_cents"),
+            F.sum(_cents()).cast("bigint").alias("sum_totalprice_cents"),
         ).select(F.lit(version).alias("version"), "*")
         out = snap if out is None else out.unionByName(snap)
     return out.orderBy("version")
@@ -630,57 +611,16 @@ def maintenance_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirroring `VACUUM ... RETAIN 0 HOURS`. At 100 TB the dead set is
     resolved from O(actions) metadata — the only filesystem work is
     the deletes themselves."""
-    import json as _json
-
-    root = tempfile.mkdtemp(prefix="sgq_vacuum_")
-    data, logdir = os.path.join(root, "data"), os.path.join(root, "_log")
-    os.makedirs(data), os.makedirs(logdir)
-    orders = load_table(spark, sf_dir, "orders")
-
-    def _files(subdir: str) -> list[str]:
-        return sorted(parquet_files(os.path.join(data, subdir)))
-
-    def _commit(version: int, adds: list[str], removes: list[str]) -> None:
-        with open(os.path.join(logdir, f"{version:05d}.json"), "w") as fh:
-            for p in adds:
-                fh.write(_json.dumps({"action": "add", "path": p, "v": version}) + "\n")
-            for p in removes:
-                fh.write(_json.dumps({"action": "remove", "path": p, "v": version}) + "\n")
-
-    low = orders.filter(F.col("o_totalprice") <= 300000)
-    high = orders.filter(F.col("o_totalprice") > 300000)
-    low.repartition(4).write.mode("overwrite").parquet(os.path.join(data, "v0"))
-    _commit(0, _files("v0"), [])
-    high.coalesce(1).write.mode("overwrite").parquet(os.path.join(data, "v1"))
-    _commit(1, _files("v1"), [])
-    spark.read.parquet(os.path.join(data, "v0")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(data, "v2"))
-    _commit(2, _files("v2"), _files("v0"))
+    data, logdir, _orders, low = _three_commit_orders(spark, sf_dir, "sgq_vacuum_")
     # Crash debris: written, never committed.
     low.limit(10).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(data, "orphan")
     )
-
-    from pyspark.sql.window import Window as _W
-
-    log = spark.read.json(os.path.join(logdir, "*.json"))
-    last = (
-        log.withColumn(
-            "rn",
-            F.row_number().over(
-                _W.partitionBy("path").orderBy(F.desc("v"), F.desc("action"))
-            ),
-        )
-        .filter((F.col("rn") == 1) & (F.col("action") == "add"))
-    )
-    live = sorted(r["path"] for r in last.select("path").collect())
+    live = sorted(_live_files(spark.read.json(os.path.join(logdir, "*.json"))))
 
     before_cs = spark.read.parquet(*live).agg(
         F.count("*").alias("n"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("cents"),
+        F.sum(_cents()).cast("bigint").alias("cents"),
     ).collect()[0]
 
     all_before = sorted(parquet_files(data))
@@ -691,9 +631,7 @@ def maintenance_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     after = spark.read.parquet(*live).agg(
         F.count("*").alias("n_rows"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_totalprice_cents"),
+        F.sum(_cents()).cast("bigint").alias("sum_totalprice_cents"),
     )
     return after.select(
         F.lit(len(all_before)).cast("bigint").alias("n_files_before"),
@@ -756,8 +694,6 @@ def q_maintenance_two_table_atomic_publish(spark: SparkSession, sf_dir: str) -> 
     consistent); the commit point is one rename regardless of how many
     tables or petabytes a snapshot spans.
     """
-    import json
-
     root = tempfile.mkdtemp(prefix="sgq_atomicpub_")
     tables = {"a": os.path.join(root, "tables", "a"), "b": os.path.join(root, "tables", "b")}
     manifests = os.path.join(root, "manifests")
@@ -769,17 +705,13 @@ def q_maintenance_two_table_atomic_publish(spark: SparkSession, sf_dir: str) -> 
     def report_a(df: DataFrame) -> DataFrame:
         return df.groupBy(F.col("o_orderpriority").alias("k")).agg(
             F.count("*").alias("n"),
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("cents"),
+            F.sum(_cents()).cast("bigint").alias("cents"),
         )
 
     def report_b(df: DataFrame) -> DataFrame:
         return df.groupBy(F.col("o_orderstatus").alias("k")).agg(
             F.count("*").alias("n"),
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("cents"),
+            F.sum(_cents()).cast("bigint").alias("cents"),
         )
 
     # committed snapshot v1: both tables written, manifest-1 + CURRENT
@@ -873,9 +805,7 @@ def q_maintenance_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("o_orderkey").alias("k"),
             "o_orderpriority",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .alias("cents"),
+            _cents().alias("cents"),
         )
         .transform(pin)
     )
@@ -905,8 +835,6 @@ def q_maintenance_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # merge-on-read: last delta per key wins over base
     deltas = spark.read.option("recursiveFileLookup", "true").parquet(delta_path)
-    from pyspark.sql.window import Window
-
     last = (
         deltas.withColumn(
             "rn", F.row_number().over(Window.partitionBy("k").orderBy(F.desc("seq")))

@@ -1457,38 +1457,6 @@ def q_multimodal_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def read_binary_dir(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Raw-asset ingestion via Spark's ``binaryFile`` source — the real
-    on-ramp for image/audio/video files at scale: each file becomes one
-    row (path, modificationTime, length, content) with the bytes read
-    lazily on the executors, so listing and reading parallelize across
-    the cluster instead of the driver. Compose with
-    ``media_features``/``decode_media`` for the decode stage.
-
-    ``pathGlobFilter`` prunes by extension at listing time (no file is
-    opened to be rejected); pair with
-    ``spark.sql.files.maxPartitionBytes`` so a few giant assets don't
-    serialize one executor."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def binary_dir_features(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """binaryFile ingestion → opaque-payload feature extraction: byte
-    stats per asset, payload dropped before anything shuffles."""
-    files = read_binary_dir(spark, path, glob)
-    return files.select(
-        F.col("path"),
-        F.col("length").alias("n_bytes"),
-        F.substring(F.base64("content"), 1, 12).alias("header_b64"),
-        F.crc32("content").alias("payload_crc32"),
-    )
-
-
 @query(
     "multimodal_arrow_stats",
     oracle="""

@@ -85,8 +85,8 @@ def stream_hourly_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds those re-emissions into exactly the batch GROUP BY — however
     the file source happened to split batches, and idempotently under
     crash-replay. This is the production shape for incremental report
-    maintenance (streaming/incremental.py:run_incremental_merge_stream);
-    the driver adjudicates its final state against plain batch SQL.
+    maintenance; the driver adjudicates its final state against plain
+    batch SQL.
 
     Scale: state is O(active windows) once the watermark is tightened;
     the MERGE rewrites only partitions containing touched keys when the
@@ -135,7 +135,8 @@ def stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     than the data span, so the dedup is exact and the final feed equals
     batch DISTINCT). Production tightens the watermark to the maximum
     duplicate lag — state becomes O(keys per watermark window), the
-    documented trade in streaming/stateful.py:77.
+    documented trade against ``streaming.stateful.hwm_dedup_stream``'s
+    O(keys)-forever state.
 
     Only the key columns are projected into the sink: first-arrival
     payloads depend on micro-batch order, keys do not — that projection
@@ -665,8 +666,8 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_stateful_hwm_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom per-key stateful streaming via ``applyInPandasWithState``
-    (the GroupState API — the repo's only stateful-streaming surface
-    that runs in this container; transformWithState needs protobuf),
+    (the GroupState API, the engine's one custom stateful-streaming
+    operator),
     adjudicated end-to-end: a per-user HIGH-WATER-MARK dedup processor
     (emit only event_ids above the user's checkpointed HWM — the
     reference's global bookmark made per-key and streaming) runs over

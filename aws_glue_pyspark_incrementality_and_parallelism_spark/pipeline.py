@@ -10,8 +10,8 @@ Stages (reference line refs in parens):
 4. two grouped-sum reports submitted concurrently to FAIR pools
    (:52-55, missing-method/unawaited-futures B2/B3 fixed)
 5. parquet sinks, one flat directory of part files per report, each
-   report's row count observed on its write (Redshift JDBC writer ≈ any
-   sink fn)
+   report's row count observed on its write (the reference writes to
+   Redshift; :86-92)
 6. bookmark commit AFTER both sinks succeed (B10 fixed)
 
 At scale: the joined frame is cached MEMORY_AND_DISK (it feeds two

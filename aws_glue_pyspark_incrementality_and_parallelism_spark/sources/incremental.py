@@ -182,9 +182,7 @@ def incremental_read(
         # Pass the stored HWM through unchanged: composite_gt rejects a
         # legacy scalar bookmark with a clear "key set changed" error
         # rather than list('abc') silently exploding it into characters.
-        sliced = df.filter(
-            composite_gt(list(key), list(hwm) if isinstance(hwm, (list, tuple)) else hwm)
-        )
+        sliced = df.filter(composite_gt(list(key), hwm))
     return IncrementalBatch(df=sliced, source=source, key=key, store=store)
 
 

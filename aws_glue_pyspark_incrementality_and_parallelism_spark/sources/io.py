@@ -4,10 +4,9 @@ The reference reads crawled MySQL tables through the Glue Catalog
 (/root/reference/glue_rds_to_redshift.py:28-40) and writes to Redshift
 via an S3-staged copy (:86-92). The rebuild is columnar-at-rest: parquet
 in, parquet out, with the same "register tables, query by name" shape via
-Spark temp views. A JDBC round-trip would be
-``spark.read.format("jdbc")`` / ``df.write.format("jdbc")`` behind the
-same helpers; parquet is the default because the driver's testdata is
-parquet.
+Spark temp views. The engine ships no JDBC or XML helpers: a JDBC
+source or sink is a plain ``spark.read.format("jdbc")`` /
+``df.write.format("jdbc")``, and the driver's testdata is parquet.
 """
 
 from __future__ import annotations
@@ -334,106 +333,6 @@ def read_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.orc(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (zlib default compression; schema travels with data)."""
-    df.write.mode(mode).orc(path)
-
-
-def read_xml(
-    spark: SparkSession, path: str, row_tag: str = "row", schema=None
-) -> DataFrame:
-    """XML source (built into Spark 4: the former spark-xml package).
-    ``rowTag`` names the repeated element that becomes one row; pass an
-    explicit schema at scale for the same no-infer rule as CSV/JSON —
-    inference reads the data twice. Unlike the columnar formats there
-    is no predicate pushdown (XML is a row-oriented text format); treat
-    it as an INGEST format: land → convert to parquet → query, so only
-    one pass ever pays the parse cost."""
-    reader = spark.read.option("rowTag", row_tag)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.format("xml").load(path)
-
-
-def write_xml(
-    df: DataFrame,
-    path: str,
-    row_tag: str = "row",
-    root_tag: str = "rows",
-    mode: str = "overwrite",
-) -> None:
-    """XML sink — for the interchange/sidecar files some catalogs and
-    feeds still require; one file per partition, same as any text sink."""
-    (
-        df.write.mode(mode)
-        .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .format("xml")
-        .save(path)
-    )
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 8,
-    options: dict[str, str] | None = None,
-) -> DataFrame:
-    """JDBC source — parity with the reference's catalog-backed MySQL
-    scans (glue_rds_to_redshift.py:28-40). Always pass the partition
-    bounds for large tables: without them Spark reads the whole table
-    through ONE connection; with them it issues ``numPartitions``
-    range-predicated queries in parallel, and pushdown-able filters
-    (e.g. the incremental HWM predicate) reach the database as WHERE
-    clauses. Untested in this container (no JDBC database)."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions))
-        )
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    options: dict[str, str] | None = None,
-    preactions: list[str] | None = None,
-) -> None:
-    """JDBC sink — parity with the reference's Redshift writer
-    (glue_rds_to_redshift.py:86-92): ``preactions`` DDL runs ONCE over a
-    direct driver-side connection before the save, exactly like Glue's
-    ``preactions`` option (Spark's own ``sessionInitStatement`` is a
-    read-path option and would re-run per session). Round-tripped in
-    tests against the embedded Derby database that ships with Spark.
-    """
-    if preactions:
-        jvm = df.sparkSession._jvm
-        conn = jvm.java.sql.DriverManager.getConnection(url)
-        try:
-            stmt = conn.createStatement()
-            for sql in preactions:
-                stmt.execute(sql)
-            stmt.close()
-        finally:
-            conn.close()
-    writer = df.write.format("jdbc").option("url", url).option("dbtable", table).mode(mode)
-    for k, v in (options or {}).items():
-        writer = writer.option(k, v)
-    writer.save()
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -454,73 +353,3 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Small-file compaction — the housekeeping pass every incremental
-    sink eventually needs: append-mode micro-batches (streaming
-    foreachBatch, per-run bookmark slices) accumulate files far below
-    the ideal scan unit, and scan parallelism degrades into
-    per-file-overhead noise.
-
-    Strategy: size the output file count from the directory's actual
-    bytes (ceil(total/target)), rewrite with ``coalesce`` (no shuffle —
-    compaction must not pay a data-sized exchange), then swap the new
-    files in atomically enough for a single-writer layout: write to a
-    sibling staging dir, delete the old files, move the new ones in.
-    On a real lakehouse this is table-format territory (Delta OPTIMIZE /
-    Iceberg rewrite_data_files with snapshot isolation); the planning
-    logic — bytes-driven target file count, shuffle-free rewrite — is
-    identical here.
-
-    Returns {"files_before", "files_after", "bytes"}.
-    """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    files_before = [
-        p for p in _glob.glob(_os.path.join(path, "*.parquet")) if _os.path.isfile(p)
-    ]
-    if not files_before:
-        files_before = [
-            p
-            for p in _glob.glob(_os.path.join(path, "part-*"))
-            if _os.path.isfile(p)
-        ]
-    # Hive-partitioned layouts keep data in key=value subdirectories; the
-    # read-then-delete swap below only tracks top-level files, so compacting
-    # such a dataset would merge partition data into new top-level files
-    # while leaving the originals in place — silently doubling the table.
-    partition_dirs = [
-        d
-        for d in _glob.glob(_os.path.join(path, "*"))
-        if _os.path.isdir(d) and not _os.path.basename(d).startswith((".", "_"))
-    ]
-    if partition_dirs:
-        raise ValueError(
-            f"compact_parquet_dir: {path} contains partition subdirectories "
-            f"({_os.path.basename(partition_dirs[0])}, ...); flat-layout "
-            "compaction would duplicate their rows. Compact each partition "
-            "directory individually instead."
-        )
-    if not files_before:
-        raise ValueError(
-            f"compact_parquet_dir: no top-level data files found under {path}"
-        )
-    total = sum(_os.path.getsize(p) for p in files_before)
-    n_out = max(1, -(-total // target_file_bytes))
-    staging = path.rstrip("/") + "__compact_staging"
-    spark.read.parquet(path).coalesce(int(n_out)).write.mode("overwrite").parquet(staging)
-    for p in files_before:
-        _os.remove(p)
-    moved = 0
-    for p in _glob.glob(_os.path.join(staging, "part-*")):
-        _shutil.move(p, _os.path.join(path, _os.path.basename(p)))
-        moved += 1
-    _shutil.rmtree(staging, ignore_errors=True)
-    return {"files_before": len(files_before), "files_after": moved, "bytes": total}

@@ -163,79 +163,6 @@ def click_to_purchase_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
 
-def run_incremental_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    watermark: str = "2 hours",
-) -> None:
-    """One incremental run: process all files not yet in the checkpoint,
-    append per-batch rollups to the output, stop.
-
-    ``availableNow`` + checkpoint = the bookmarked batch job, re-runnable
-    on a schedule; each run picks up exactly the new files. foreachBatch
-    writes in ``update`` mode — downstream readers aggregate the
-    micro-batch deltas (or use mode("complete") into a sink that
-    supports overwrite-by-window).
-    """
-    events = read_events_stream(spark, source_dir)
-    rollup = hourly_rollup_stream(events, watermark)
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(output_dir)
-
-    query = (
-        rollup.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def run_incremental_merge_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    report_dir: str,
-    watermark: str = "2 hours",
-) -> None:
-    """Incremental run whose sink is a keyed MERGE — the exactly-once
-    composition of this module's bookmarked stream and
-    ``operators.upsert``.
-
-    Update-mode emits each (window, event_type) row whenever a
-    micro-batch changes it; the foreachBatch upsert folds those deltas
-    into the standing report by key (last-writer-wins). Because the
-    merge is keyed and the emitted row carries the window's *current
-    cumulative* aggregate, replaying a micro-batch after a crash
-    rewrites the same keys with the same values — idempotent, no
-    append-duplication (contrast ``run_incremental_stream``, whose
-    append sink needs downstream delta-merging). This is the plain-
-    parquet version of Delta/Iceberg MERGE INTO from foreachBatch.
-    """
-    from ..operators.upsert import upsert_parquet
-
-    events = read_events_stream(spark, source_dir)
-    rollup = hourly_rollup_stream(events, watermark)
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parquet(
-            spark, report_dir, batch_df, keys=["window_start", "event_type"]
-        )
-
-    query = (
-        rollup.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_merge_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
 def session_rollup_stream(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "1 minute"
 ) -> DataFrame:

@@ -72,24 +72,6 @@ def hwm_dedup_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def dedup_within_watermark_stream(
-    events: DataFrame, delay: str = "30 days", keys: tuple[str, ...] = ("user_id", "event_id")
-) -> DataFrame:
-    """Built-in streaming dedup with BOUNDED state
-    (``dropDuplicatesWithinWatermark``, Spark 3.5+): a duplicate of
-    ``keys`` re-delivered within ``delay`` of the first sighting is
-    dropped; dedup state older than the watermark horizon is evicted.
-
-    This is the complement of ``hwm_dedup_stream``: the HWM operator
-    keeps O(keys) state forever and assumes monotonic ids; this one
-    assumes duplicates arrive within a bounded lateness horizon and in
-    exchange keeps only O(keys-per-horizon) state — the right default
-    for at-least-once upstreams (Kafka redeliveries, retried file
-    drops) at 100 TB/day volumes where "all keys ever" cannot be state.
-    """
-    return events.withWatermark("ts", delay).dropDuplicatesWithinWatermark(list(keys))
-
-
 # Executor pythons do not have the repo on sys.path; the stateful
 # processor must travel by value inside the serialized closure.
 pickle_module_by_value(__name__)

@@ -142,27 +142,6 @@ def _headline_line(total: float, sf: float, timings: dict) -> str:
     return json.dumps(headline, separators=(",", ":"))
 
 
-def _current_round() -> int:
-    """Round labeling (ADVICE r4): $SPARK_GRAFT_ROUND wins when set — a
-    re-run performed AFTER the driver records the current round's
-    BENCH_r{N}.json would otherwise infer N+1 and pollute the next
-    round's history. Fallback inference: the driver records
-    BENCH_r{N}.json after the round's bench run, so the current round is
-    one past the highest existing record."""
-    import glob as _glob
-    import re as _re
-
-    explicit = os.environ.get("SPARK_GRAFT_ROUND")
-    if explicit is not None:
-        return int(explicit)
-    recorded = [
-        int(m.group(1))
-        for p in _glob.glob(os.path.join(_REPO_ROOT, "BENCH_r*.json"))
-        if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    return max(recorded, default=0) + 1
-
-
 #: The fresh-subprocess panel, re-timed every round so the
 #: ``isolated_fresh`` column compares fresh against fresh across rounds.
 #: Fixed and sorted: every name is a registry query (pinned by
@@ -439,15 +418,9 @@ def main() -> None:
         # speed; recording the machine context lets a future reader
         # dismiss headline noise without re-deriving it.
         "sysinfo": host.finish(),
-        "round": _current_round(),
     }
-    # Archive per round (round-3 verdict task #4): BENCH_DETAIL.json is
-    # the rolling "latest" pointer; the per-round copy is the history
-    # that keeps round-over-round per-query regressions attributable.
-    # Round labeling lives in _current_round().
-    for out_name in ("BENCH_DETAIL.json", f"BENCH_DETAIL_r{detail['round']:02d}.json"):
-        with open(os.path.join(_REPO_ROOT, out_name), "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
+    with open(os.path.join(_REPO_ROOT, "BENCH_DETAIL.json"), "w") as f:
+        json.dump(detail, f, indent=1, sort_keys=True)
     print(_headline_line(total, sf, timings))
     spark.stop()
 

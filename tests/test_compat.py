@@ -111,6 +111,56 @@ def test_compat_bookmarks_skip_seen_rows(spark, tmp_path):
     assert first > 0
 
 
+def test_compat_composite_bookmark_keys(spark, tmp_path):
+    """Composite jobBookmarkKeys through the façade: two runs over a
+    split source. The second run yields exactly the new rows, and the
+    committed bookmark is the (l_orderkey, l_linenumber) pair as a list."""
+    import json
+
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
+        TABLES,
+        table_path,
+    )
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    for name in TABLES:
+        if name != "lineitem":
+            os.symlink(os.path.abspath(table_path(SF_SMALL, name)), table_path(sf_dir, name))
+    keys = ["l_orderkey", "l_linenumber"]
+    li = spark.read.parquet(table_path(SF_SMALL, "lineitem")).select(*keys, "l_quantity")
+    cut = li.approxQuantile("l_orderkey", [0.5], 0.01)[0]
+    out = str(tmp_path / "out")
+
+    def _run():
+        ctx = compat.GlueCompatContext(spark, sf_dir, out, job_bookmarks=True)
+        fact = ctx.create_dynamic_frame.from_catalog(
+            database="testdata",
+            table_name="lineitem",
+            transformation_ctx="src_lineitem",
+            additional_options={"jobBookmarkKeys": keys, "jobBookmarkKeysSortOrder": "asc"},
+        )
+        rows = {tuple(r) for r in fact.toDF().select(*keys).collect()}
+        ctx.commit_bookmarks()
+        return rows
+
+    first = li.filter(F.col("l_orderkey") <= cut)
+    first.write.parquet(table_path(sf_dir, "lineitem"))
+    run1 = _run()
+    assert run1 == {tuple(r) for r in first.select(*keys).collect()}
+
+    li.write.mode("overwrite").parquet(table_path(sf_dir, "lineitem"))
+    run2 = _run()
+    new = li.filter(F.col("l_orderkey") > cut).select(*keys)
+    assert run2 == {tuple(r) for r in new.collect()} and run2
+    assert not run1 & run2
+
+    with open(os.path.join(out, "_bookmarks.json")) as f:
+        stored = json.load(f)["src_lineitem"]
+    assert isinstance(stored, list)
+    assert stored == list(max(run2))
+
+
 def test_choice_type_resolution(spark, tmp_path):
     """SURVEY §1.1 choice types: a mixed int-vs-string column becomes a
     one-hot choice struct, then each Glue resolveChoice action produces

@@ -33,14 +33,11 @@ def test_json_roundtrip(spark, tmp_path):
 
 
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
-        read_orc,
-        write_orc,
-    )
+    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import read_orc
 
     supplier = load_table(spark, SF_SMALL, "supplier")
     path = str(tmp_path / "supplier_orc")
-    write_orc(supplier, path)
+    supplier.write.orc(path)
     back = read_orc(spark, path)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, supplier.collect()))
     # pushdown + pruning reach the ORC scan like parquet
@@ -237,69 +234,3 @@ class TestPythonDataSource:
             "restart must resume from the checkpointed offset losslessly: "
             f"got {len(got)} rows"
         )
-
-
-class TestBinaryFileSource:
-    def test_binary_dir_ingestion(self, spark, tmp_path):
-        """binaryFile source: one row per asset, bytes intact, glob
-        pruning at listing time."""
-        from aws_glue_pyspark_incrementality_and_parallelism_spark.operators import (
-            multimodal as mm,
-        )
-
-        d = tmp_path / "assets"
-        d.mkdir()
-        png = b"\x89PNG\r\n\x1a\n" + bytes(range(64))
-        wav = b"RIFF....WAVE" + bytes(64)
-        (d / "a.png").write_bytes(png)
-        (d / "b.png").write_bytes(png * 2)
-        (d / "c.wav").write_bytes(wav)
-
-        allf = mm.read_binary_dir(spark, str(d))
-        assert allf.count() == 3
-        assert {"path", "modificationTime", "length", "content"} <= set(allf.columns)
-
-        pngs = mm.read_binary_dir(spark, str(d), glob="*.png")
-        assert pngs.count() == 2
-        got = {r.path.rsplit("/", 1)[-1]: bytes(r.content) for r in pngs.collect()}
-        assert got["a.png"] == png and got["b.png"] == png * 2
-
-        feats = mm.binary_dir_features(spark, str(d), glob="*.png").collect()
-        import binascii
-
-        expected_crc = binascii.crc32(png) & 0xFFFFFFFF
-        by_name = {r.path.rsplit("/", 1)[-1]: r for r in feats}
-        assert by_name["a.png"].n_bytes == len(png)
-        assert by_name["a.png"].payload_crc32 == expected_crc
-
-
-def test_xml_roundtrip(spark, tmp_path):
-    """XML source/sink (built into Spark 4): lossless round-trip with an
-    explicit schema, and the custom rowTag is honored."""
-    from pyspark.sql import functions as F
-
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
-        read_xml,
-        write_xml,
-    )
-
-    nation = load_table(spark, SF_SMALL, "nation").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    path = str(tmp_path / "nation_xml")
-    write_xml(nation, path, row_tag="nation", root_tag="nations")
-    back = read_xml(spark, path, row_tag="nation", schema=nation.schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))
-    # the files really are XML with the requested tags
-    import glob
-
-    part = sorted(glob.glob(f"{path}/part-*"))[0]
-    body = open(part).read()
-    assert "<nations>" in body and "<nation>" in body
-    # schema-pinned read composes with filters (no pushdown claim: XML
-    # is a row text format — the filter runs post-parse)
-    q = read_xml(spark, path, row_tag="nation", schema=nation.schema).filter(
-        F.col("n_regionkey") == 0
-    )
-    expected = nation.filter(F.col("n_regionkey") == 0)
-    assert sorted(map(tuple, q.collect())) == sorted(map(tuple, expected.collect()))

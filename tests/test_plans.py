@@ -239,24 +239,6 @@ def test_pagerank_broadcasts_rank_vector_below_threshold(spark):
     assert "SortMergeJoin" in fallback or "ShuffledHashJoin" in fallback
 
 
-def test_minhash_candidates_bucketed_equijoin(spark):
-    """MinHash LSH candidate pairs must come from the (band_idx,
-    band_hash) equi self-join — never a cartesian or single-partition
-    funnel — and the document scan must prune to (doc_id, text).
-    Targets the pair-producing scale path directly: the registered
-    query wraps it in a one-row recall summary whose final global
-    aggregate legitimately funnels to a single partition."""
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.operators import dedup
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import load_table as _lt
-
-    df = dedup.minhash_verified_pairs(_lt(spark, SF_SMALL, "documents"))
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = df._jdf.queryExecution().explainString(mode)
-    assert "CartesianProduct" not in plan
-    assert "SinglePartition" not in plan
-    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
-
-
 def test_langid_single_scan_no_shuffle_funnel(spark):
     """Stopword-argmax language ID is a pure projection: one scan,
     no exchange at all."""
@@ -337,11 +319,12 @@ def test_portable_twins_share_scale_path_skeleton(spark):
     # (materialize=False: the production localCheckpoint would hide the
     # banding lineage from the final plan)
     docs = load_table(spark, SF_SMALL, "documents")
-    for df in (
-        dedup.minhash_candidate_pairs(docs, materialize=False),
-        REGISTRY["dedup_minhash_portable"].fn(spark, SF_SMALL),
-    ):
-        plan = fmt(df)
+    scale_plan = fmt(dedup.minhash_candidate_pairs(docs, materialize=False))
+    # the scale path's document scan prunes to (doc_id, text), and no
+    # stage funnels the candidate pairs onto one partition
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in scale_plan
+    assert "SinglePartition" not in scale_plan
+    for plan in (scale_plan, fmt(REGISTRY["dedup_minhash_portable"].fn(spark, SF_SMALL))):
         assert "CartesianProduct" not in plan
         assert "band_hash" in plan and "band_idx" in plan
         assert "HashAggregate" in plan  # the min-slot signature aggregate

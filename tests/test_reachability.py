@@ -1,0 +1,120 @@
+"""Reachability guard: no public top-level def in the package is reached
+only from tests.
+
+An AST scan (no imports, no Spark). Candidates are the public (no
+leading underscore), undecorated top-level functions and classes of every
+package module except ``compat.py``, whose Glue-API façade is public
+surface by design. Decorated defs are excluded: ``@query`` functions are
+reached through the registry, and ``@dataclass`` classes are data types.
+A candidate counts as reached when its name appears, anywhere in a root
+file, as a ``Name``, an ``Attribute``, an imported name, or a string
+constant equal to it. Roots are the non-test entry points: the package
+itself, ``__spark_entry__.py``, ``bench.py``, ``parity_sweep.py``,
+``plan_audit.py``, ``perfbench/`` and ``plans/``.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+from .conftest import REPO_ROOT
+
+PACKAGE = "aws_glue_pyspark_incrementality_and_parallelism_spark"
+
+ROOTS = (
+    PACKAGE,
+    "__spark_entry__.py",
+    "bench.py",
+    "parity_sweep.py",
+    "plan_audit.py",
+    "perfbench",
+    "plans",
+)
+
+#: Defs that only tests reach today, each kept for a named reason. The
+#: list only shrinks: the test fails when an entry becomes reached or
+#: disappears, so its line must go with it.
+ALLOWED_UNREACHED = {
+    "merge_report_increment": "the merge step the incremental ETL reports "
+    "need after a second run (ROADMAP item 1 wires it into run_etl)",
+    "run_incremental": "filter → write → commit in one call; the commit-path "
+    "rewrite of ROADMAP item 1 lands there",
+    "write_range_sorted": "the key-clustered landing writer that makes a "
+    "bookmark scan O(new data) (ROADMAP item 8)",
+    "simhash_frame": "the locality tests' handle on the live simhash vote "
+    "aggregate that the registered dedup_simhash queries use",
+}
+
+
+def _py_files(rel: str) -> list[str]:
+    path = os.path.join(REPO_ROOT, rel)
+    if os.path.isfile(path):
+        return [path]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if d not in ("tests", "__pycache__")]
+        out.extend(os.path.join(root, f) for f in files if f.endswith(".py"))
+    return sorted(out)
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), filename=path)
+
+
+def _candidates() -> dict[str, str]:
+    """Public, undecorated top-level def name -> defining file."""
+    out = {}
+    for path in _py_files(PACKAGE):
+        if os.path.basename(path) == "compat.py":
+            continue
+        for node in _parse(path).body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.name.startswith("_")
+                and not node.decorator_list
+            ):
+                out[node.name] = os.path.relpath(path, REPO_ROOT)
+    return out
+
+
+def _referenced() -> set[str]:
+    names: set[str] = set()
+    for rel in ROOTS:
+        for path in _py_files(rel):
+            for node in ast.walk(_parse(path)):
+                if isinstance(node, ast.Name):
+                    names.add(node.id)
+                elif isinstance(node, ast.Attribute):
+                    names.add(node.attr)
+                elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                    names.update(alias.name for alias in node.names)
+                elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    names.add(node.value)
+    return names
+
+
+def test_every_public_def_is_reached_outside_tests():
+    defs = _candidates()
+    reached = _referenced()
+    unreached = {
+        name: path
+        for name, path in defs.items()
+        if name not in reached and name not in ALLOWED_UNREACHED
+    }
+    assert not unreached, (
+        "public defs that no non-test entry point reaches; wire each into a "
+        f"real path or delete it with its tests: {sorted(unreached.items())}"
+    )
+
+
+def test_allowlist_only_shrinks():
+    defs = _candidates()
+    reached = _referenced()
+    gone = sorted(name for name in ALLOWED_UNREACHED if name not in defs)
+    now_reached = sorted(name for name in ALLOWED_UNREACHED if name in reached)
+    assert not gone, f"allowlisted defs no longer exist; drop them from the list: {gone}"
+    assert not now_reached, (
+        f"allowlisted defs are reached now; drop them from the list: {now_reached}"
+    )

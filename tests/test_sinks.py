@@ -47,93 +47,3 @@ def test_dynamic_partition_overwrite_is_idempotent(spark, tmp_path):
         assert after.filter(F.col("event_type") == "click").count() == clicks.count()
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def test_compact_parquet_dir_preserves_data(spark, tmp_path):
-    """Compaction: many small append files become few right-sized ones;
-    row set is byte-identical before/after."""
-    from pyspark.sql import functions as F
-
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
-        compact_parquet_dir,
-        load_table,
-    )
-    from .conftest import SF_SMALL
-
-    out = str(tmp_path / "sink")
-    orders = load_table(spark, SF_SMALL, "orders")
-    # simulate 12 micro-batch appends
-    for i in range(12):
-        orders.filter(F.col("o_orderkey") % 12 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(out)
-
-    before = spark.read.parquet(out)
-    n_before = before.count()
-    checksum_before = before.agg(
-        F.sum(F.crc32(F.concat_ws("|", "o_orderkey", "o_orderstatus")))
-    ).collect()[0][0]
-
-    stats = compact_parquet_dir(spark, out, target_file_bytes=64 * 1024 * 1024)
-    assert stats["files_before"] >= 12
-    assert stats["files_after"] < stats["files_before"]
-
-    after = spark.read.parquet(out)
-    assert after.count() == n_before
-    checksum_after = after.agg(
-        F.sum(F.crc32(F.concat_ws("|", "o_orderkey", "o_orderstatus")))
-    ).collect()[0][0]
-    assert checksum_after == checksum_before
-
-
-def test_jdbc_roundtrip_embedded_derby(spark, tmp_path):
-    """Live JDBC sink/source round-trip against the embedded Derby
-    database that ships in Spark's jars — the closest in-container stand-in
-    for the reference's Redshift sink: preactions DDL runs once over a
-    direct connection (Glue semantics), then the DataFrame appends over
-    JDBC, then a delete-and-reload preaction proves idempotent re-runs."""
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
-        read_jdbc,
-        write_jdbc,
-    )
-
-    url = f"jdbc:derby:{tmp_path}/derbydb;create=true"
-    df = spark.createDataFrame(
-        [(1, "AAA", 10.5), (2, "BBB", 20.25), (3, "CCC", 30.0)],
-        "id int, name string, amount double",
-    )
-    ddl = "CREATE TABLE app.sales (id INT, name VARCHAR(32), amount DOUBLE)"
-    write_jdbc(df, url, "app.sales", mode="append", preactions=[ddl])
-    back = read_jdbc(spark, url, "app.sales")
-    assert sorted(tuple(r) for r in back.collect()) == sorted(
-        tuple(r) for r in df.collect()
-    )
-
-    # Re-run with the reference's truncate-and-reload preaction shape:
-    # count must stay 3 (idempotent), not double to 6.
-    write_jdbc(df, url, "app.sales", mode="append", preactions=["DELETE FROM app.sales"])
-    assert read_jdbc(spark, url, "app.sales").count() == 3
-
-
-def test_jdbc_partitioned_parallel_read(spark, tmp_path):
-    """Partition-bounded JDBC read: numPartitions range predicates must
-    split the scan (the anti-single-connection pattern for large tables)
-    and return exactly the full row set."""
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
-        read_jdbc,
-        write_jdbc,
-    )
-
-    url = f"jdbc:derby:{tmp_path}/derbydb2;create=true"
-    df = spark.range(0, 100).selectExpr("CAST(id AS INT) AS id", "id * 2.0 AS val")
-    write_jdbc(
-        df, url, "app.wide", mode="append",
-        preactions=["CREATE TABLE app.wide (id INT, val DOUBLE)"],
-    )
-    back = read_jdbc(
-        spark, url, "app.wide",
-        partition_column="id", lower_bound=0, upper_bound=100, num_partitions=4,
-    )
-    assert back.rdd.getNumPartitions() == 4
-    assert back.count() == 100
-    assert back.agg(F.sum("val")).collect()[0][0] == sum(i * 2.0 for i in range(100))

@@ -61,89 +61,6 @@ def test_keyed_hwm_dedup_across_runs(spark, tmp_path):
     assert dup == 0
 
 
-def test_drop_duplicates_within_watermark_across_runs(spark, tmp_path):
-    """Redelivered (user_id, event_id) pairs within the watermark
-    horizon are dropped across checkpointed runs; fresh events pass."""
-    tmp = str(tmp_path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-    cut = raw.agg(F.expr("percentile(event_id, 0.5)")).collect()[0][0]
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    out = os.path.join(tmp, "out")
-
-    def _run():
-        events = si.read_events_stream(spark, src)
-        deduped = stateful.dedup_within_watermark_stream(events)
-        q = (
-            deduped.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, _id: df.write.mode("append").parquet(out))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    batch1 = raw.filter(F.col("event_id") <= cut)
-    batch1.write.parquet(src)
-    _run()
-    assert spark.read.parquet(out).count() == batch1.count()
-
-    resend = raw.filter(
-        (F.col("event_id") > cut * 0.8) & (F.col("event_id") <= cut)
-    )
-    fresh = raw.filter(F.col("event_id") > cut)
-    resend.unionByName(fresh).write.mode("append").parquet(src)
-    _run()
-
-    final = spark.read.parquet(out)
-    assert final.count() == raw.count()
-    dup = final.groupBy("user_id", "event_id").count().filter(F.col("count") > 1).count()
-    assert dup == 0
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark 4 StatefulProcessor: per-user running totals survive the
-    checkpoint across two availableNow runs; the latest emission per
-    user equals the batch groupBy over the full source.
-
-    transformWithState's control channel is protobuf-encoded; skip when
-    the container lacks the protobuf package (the operator itself is
-    environment-independent)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.streaming import tws
-
-    tmp = str(tmp_path)
-    raw = spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-    cut = raw.agg(F.expr("percentile(event_id, 0.5)")).collect()[0][0]
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    out = os.path.join(tmp, "out")
-
-    raw.filter(F.col("event_id") <= cut).write.parquet(src)
-    tws.run_running_totals(spark, src, ckpt, out)
-    raw.filter(F.col("event_id") > cut).write.mode("append").parquet(src)
-    tws.run_running_totals(spark, src, ckpt, out)
-
-    from pyspark.sql.window import Window
-
-    emitted = spark.read.parquet(out)
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    latest = (
-        emitted.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", F.round("total_value", 4).alias("total_value"))
-    )
-    expected = raw.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-    )
-    assert latest.count() == expected.count() > 0
-    assert latest.exceptAll(expected).count() == 0
-
-
 def test_streaming_session_window_matches_batch(spark, tmp_path):
     """Append-mode session_window stream: every emitted session matches
     the batch session_window aggregation exactly (closed sessions only)."""

@@ -1,6 +1,6 @@
-"""Streaming incremental pipeline tests: checkpointed file-source
-exactly-once (the bookmark analog), watermark behavior, and equivalence
-with the batch rollup."""
+"""Streaming pipeline tests: watermark behavior across checkpointed
+availableNow runs, and stream-static / stream-stream joins checked
+against their batch equivalents."""
 
 from __future__ import annotations
 
@@ -31,38 +31,6 @@ def _split_events(spark, tmp):
     events.filter(F.col("ts").cast("long") <= cut).write.parquet(src)
     later = events.filter(F.col("ts").cast("long") > cut)
     return src, later
-
-
-def test_incremental_stream_no_duplicates(spark, tmp_path):
-    tmp = str(tmp_path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src, later = _split_events(spark, tmp)
-    ckpt = os.path.join(tmp, "ckpt")
-    out = os.path.join(tmp, "out")
-
-    si.run_incremental_stream(spark, src, ckpt, out, watermark="100 hours")
-    n_after_run1 = spark.read.parquet(out).agg(F.sum("n_events")).collect()[0][0]
-    assert n_after_run1 > 0
-
-    # Second batch of files arrives; rerun picks up ONLY the new files.
-    later.write.mode("append").parquet(src)
-    si.run_incremental_stream(spark, src, ckpt, out, watermark="100 hours")
-
-    # Sum of per-batch deltas == one full batch rollup (no double counting
-    # even though run 2 re-saw the run-1 directory).
-    got = (
-        spark.read.parquet(out)
-        .groupBy("window_start", "event_type")
-        .agg(F.sum("n_events").alias("n_events"))
-    )
-    expected = (
-        load_table(spark, SF_SMALL, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-    assert got.exceptAll(expected).count() == 0
-    assert expected.exceptAll(got).count() == 0
 
 
 def test_stream_static_enrichment_join(spark, tmp_path):
@@ -119,16 +87,29 @@ def test_watermark_drops_late_events(spark, tmp_path):
             "event_id long, ts long, user_id long, event_type string, value double, props string",
         )
 
+    def _run():
+        # One availableNow run: every file not yet in the checkpoint,
+        # rolled up per hour, each micro-batch's update appended to out.
+        rollup = si.hourly_rollup_stream(si.read_events_stream(spark, src), "2 hours")
+        (
+            rollup.writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(lambda df, _id: df.write.mode("append").parquet(out))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
     t0 = datetime.datetime(2024, 6, 1, 12, 0, 0)
     recent = [(1, t0), (2, t0 + datetime.timedelta(minutes=30))]
     _mk_events(recent).write.parquet(src)
-    si.run_incremental_stream(spark, src, ckpt, out, watermark="2 hours")
+    _run()
 
     # run 2: one event 10 hours BEFORE the watermark, one new event after t0
     late = (3, t0 - datetime.timedelta(hours=10))
     fresh = (4, t0 + datetime.timedelta(hours=1))
     _mk_events([late, fresh]).write.mode("append").parquet(src)
-    si.run_incremental_stream(spark, src, ckpt, out, watermark="2 hours")
+    _run()
 
     got = spark.read.parquet(out)
     late_window = t0 - datetime.timedelta(hours=10)
@@ -136,20 +117,6 @@ def test_watermark_drops_late_events(spark, tmp_path):
         got.filter(F.col("window_start") <= late_window).count() == 0
     ), "event below the watermark must be dropped"
     assert got.filter(F.col("window_start") == t0 + datetime.timedelta(hours=1)).count() == 1
-
-
-def test_rerun_without_new_files_is_noop(spark, tmp_path):
-    tmp = str(tmp_path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src, _ = _split_events(spark, tmp)
-    ckpt = os.path.join(tmp, "ckpt")
-    out = os.path.join(tmp, "out")
-
-    si.run_incremental_stream(spark, src, ckpt, out, watermark="100 hours")
-    total1 = spark.read.parquet(out).agg(F.sum("n_events")).collect()[0][0]
-    si.run_incremental_stream(spark, src, ckpt, out, watermark="100 hours")
-    total2 = spark.read.parquet(out).agg(F.sum("n_events")).collect()[0][0]
-    assert total1 == total2, "rerun with no new files must process nothing"
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
@@ -191,71 +158,3 @@ def test_stream_stream_interval_join(spark, tmp_path):
     ).select("purchase_id", "click_id")
     assert got.count() == expected.count() > 0
     assert expected.exceptAll(got).count() == 0
-
-
-def test_merge_sink_exactly_once(spark, tmp_path):
-    """foreachBatch + keyed upsert: the standing report equals the batch
-    rollup after incremental runs, AND a from-scratch replay into the
-    same report directory converges to the identical state (keyed merge
-    is idempotent where the append sink would duplicate)."""
-    tmp = str(tmp_path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src, later = _split_events(spark, tmp)
-    ckpt = os.path.join(tmp, "ckpt")
-    report = os.path.join(tmp, "report")
-
-    si.run_incremental_merge_stream(spark, src, ckpt, report, watermark="100 hours")
-    later.write.mode("append").parquet(src)
-    si.run_incremental_merge_stream(spark, src, ckpt, report, watermark="100 hours")
-
-    expected = (
-        load_table(spark, SF_SMALL, "events")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-    got = spark.read.parquet(report).select("window_start", "event_type", "n_events")
-    assert got.count() == expected.count() > 0
-    assert got.exceptAll(expected).count() == 0
-
-    # Crash-replay simulation: lose the checkpoint, reprocess everything
-    # into the SAME report. Keyed merge rewrites keys in place — state
-    # converges instead of double-counting.
-    import shutil
-
-    shutil.rmtree(ckpt)
-    si.run_incremental_merge_stream(spark, src, os.path.join(tmp, "ckpt2"), report,
-                                    watermark="100 hours")
-    got2 = spark.read.parquet(report).select("window_start", "event_type", "n_events")
-    assert got2.count() == expected.count()
-    assert got2.exceptAll(expected).count() == 0
-
-
-def test_stream_sink_then_compaction(spark, tmp_path):
-    """Ops composition: the append-mode streaming sink accumulates
-    per-batch files; compaction rewrites them into few right-sized files
-    without changing the row set — the nightly housekeeping pass every
-    incremental pipeline runs."""
-    from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import (
-        compact_parquet_dir,
-    )
-
-    tmp = str(tmp_path)
-    src, later = _split_events(spark, tmp)
-    ckpt = os.path.join(tmp, "ckpt")
-    out = os.path.join(tmp, "out")
-
-    si.run_incremental_stream(spark, src, ckpt, out, watermark="100 hours")
-    later.write.mode("append").parquet(src)
-    si.run_incremental_stream(spark, src, ckpt, out, watermark="100 hours")
-
-    before = spark.read.parquet(out)
-    n_rows = before.count()
-    total_events = before.agg(F.sum("n_events")).collect()[0][0]
-
-    stats = compact_parquet_dir(spark, out)
-    assert stats["files_after"] < stats["files_before"]
-
-    after = spark.read.parquet(out)
-    assert after.count() == n_rows
-    assert after.agg(F.sum("n_events")).collect()[0][0] == total_events
