@@ -26,13 +26,13 @@ shuffle exchanges in the physical plan.
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import scratch_dir
 from ..sources.io import load_table
 
 N_BUCKETS = 8
@@ -102,7 +102,7 @@ def q_join_bucketed_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the small sf0.01 orders side.
     """
     run = uuid.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix="sgq_bucketed_")
+    base = scratch_dir("sgq_bucketed_")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
@@ -164,7 +164,7 @@ def q_join_dpp_partitioned_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed join's shuffle audit); the dim holds min_year+1 so the
     probe year exists at every SF.
     """
-    base = tempfile.mkdtemp(prefix="sgq_dpp_")
+    base = scratch_dir("sgq_dpp_")
     path = f"{base}/orders_by_year"
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
@@ -234,7 +234,7 @@ def q_agg_bucketed_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-derived boolean, like the bucketed join.
     """
     run = uuid.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix="sgq_baggr_")
+    base = scratch_dir("sgq_baggr_")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     table = f"sgq_ba_{run}"
     write_bucketed(li, "l_orderkey", table, f"{base}/lineitem")

@@ -23,12 +23,12 @@ hazard (a single all-null partition flips a column to string).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
+from ..session import scratch_dir
 from ..sources.io import load_table, read_csv, read_json, read_orc
 
 #: The integrity surface every lane must reproduce exactly.
@@ -72,7 +72,7 @@ def q_source_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     same checksums once and expects all three lanes identical)."""
     orders = load_table(spark, sf_dir, "orders")
     schema = orders.schema
-    root = tempfile.mkdtemp(prefix="sgq_formats_")
+    root = scratch_dir("sgq_formats_")
 
     csv_path = os.path.join(root, "csv")
     json_path = os.path.join(root, "json")
@@ -195,9 +195,6 @@ def q_source_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan note: each lane is an independent scan→write→scan; the final
     result is a 4-row unionByName, and the checksums reuse the same
     partial-aggregate shape as `source_multiformat_roundtrip`."""
-    import os
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders")
     src = orders.agg(
         F.count("*").alias("n_rows"),
@@ -206,7 +203,7 @@ def q_source_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cents"),
         F.sum("o_orderkey").alias("key_sum"),
     )
-    root = tempfile.mkdtemp(prefix="sgq_codec_")
+    root = scratch_dir("sgq_codec_")
     out = None
     for codec in ["gzip", "snappy", "uncompressed", "zstd"]:
         path = os.path.join(root, codec)
@@ -276,7 +273,7 @@ def q_source_hive_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFra
       rewrite byte-exactly (partition values round-trip through
       directory names, including the '1-URGENT' hyphen/digit mix).
     """
-    base = tempfile.mkdtemp(prefix="sgq_hivepart_")
+    base = scratch_dir("sgq_hivepart_")
     path = os.path.join(base, "orders_by_priority")
     orders_src = load_table(spark, sf_dir, "orders")
     orders_src.write.partitionBy("o_orderpriority").mode("overwrite").parquet(path)
@@ -340,7 +337,7 @@ def q_source_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFra
     at 100 TB you bound that with a catalog schema instead, but the
     read-side semantics pinned here are identical.
     """
-    base = tempfile.mkdtemp(prefix="sgq_evolve_")
+    base = scratch_dir("sgq_evolve_")
     p_old = os.path.join(base, "batch_old")
     p_new = os.path.join(base, "batch_new")
     docs = load_table(spark, sf_dir, "documents")
@@ -473,7 +470,7 @@ def q_source_provenance_input_file(spark: SparkSession, sf_dir: str) -> DataFram
     the logical table. Scale: input_file_name() is metadata the scan
     already holds (zero cost), and the audit is one aggregate.
     """
-    base = tempfile.mkdtemp(prefix="sgq_prov_")
+    base = scratch_dir("sgq_prov_")
     path = os.path.join(base, "orders_by_priority")
     orders_src = load_table(spark, sf_dir, "orders")
     orders_src.write.partitionBy("o_orderpriority").mode("overwrite").parquet(path)
@@ -534,7 +531,7 @@ def q_source_fixed_width_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row arithmetic with zero shuffles before the checksum
     aggregate. Schema lives in the offsets — version them like code.
     """
-    base = tempfile.mkdtemp(prefix="sgq_fixedw_")
+    base = scratch_dir("sgq_fixedw_")
     path = os.path.join(base, "orders.fw")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",

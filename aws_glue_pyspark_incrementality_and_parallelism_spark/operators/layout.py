@@ -315,10 +315,9 @@ def q_layout_sorted_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard pay-once layout cost; every later time-bounded scan
     reads only overlapping files."""
     import os
-    import tempfile
 
     orders = load_table(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.mkdtemp(prefix="sgq_sorted_"), "orders")
+    out = os.path.join(scratch_dir("sgq_sorted_"), "orders")
     (
         orders.repartitionByRange(8, "o_orderdate")
         .sortWithinPartitions("o_orderdate")
@@ -526,6 +525,6 @@ def q_layout_consistent_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # layout defines mapInPandas closures; executors do not have the repo
 # on sys.path (worker-closure rule), so pickle the module by value.
-from ..session import pickle_module_by_value, pin# noqa: E402
+from ..session import pickle_module_by_value, pin, scratch_dir  # noqa: E402
 
 pickle_module_by_value(__name__)

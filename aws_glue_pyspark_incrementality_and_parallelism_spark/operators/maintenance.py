@@ -29,8 +29,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import shutil
-import tempfile
 import uuid
 from functools import reduce
 
@@ -39,8 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.registry import query
-from ..session import pin
-from ..sources.io import load_table
+from ..session import pin, scratch_dir
+from ..sources.io import load_table, swap_parquet
 
 
 def parquet_files(target_dir: str) -> list[str]:
@@ -60,8 +58,8 @@ def compact_parquet(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
     """Bin-pack the files under ``target_dir`` into ~``target_file_bytes``
-    outputs. Copy-on-write with an atomic staging swap (same commit
-    protocol as upsert.py:26).
+    outputs. Copy-on-write through ``sources.io.swap_parquet``, the
+    commit ``upsert_parquet`` uses.
 
     File count is computed from on-disk bytes, not row counts, so the
     result respects the scan-side ``files.maxPartitionBytes`` sizing
@@ -76,14 +74,7 @@ def compact_parquet(
     files = parquet_files(target_dir)
     bytes_total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(bytes_total / target_file_bytes))
-    merged = spark.read.parquet(target_dir).repartition(n_out)
-
-    staging = f"{target_dir}__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    backup = f"{target_dir}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_dir, backup)
-    os.rename(staging, target_dir)
-    shutil.rmtree(backup)
+    swap_parquet(spark.read.parquet(target_dir).repartition(n_out), target_dir)
     return {
         "files_before": len(files),
         "files_after": len(parquet_files(target_dir)),
@@ -114,7 +105,7 @@ def _three_commit_orders(
     Each commit is one ``_log/{v:05d}.json`` file of JSON lines
     ``{"action": "add"|"remove", "path": ..., "v": v}``. Returns
     ``(data_dir, log_dir, orders, low)``."""
-    root = tempfile.mkdtemp(prefix=prefix)
+    root = scratch_dir(prefix)
     data, logdir = os.path.join(root, "data"), os.path.join(root, "_log")
     os.makedirs(data), os.makedirs(logdir)
     orders = load_table(spark, sf_dir, "orders")
@@ -180,7 +171,7 @@ def maintenance_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFra
     plus the file-count assertions as pinned-TRUE booleans computed
     from the real before/after listings.
     """
-    frag_dir = os.path.join(tempfile.mkdtemp(prefix="sgq_compact_"), "lineitem")
+    frag_dir = os.path.join(scratch_dir("sgq_compact_"), "lineitem")
     (
         load_table(spark, sf_dir, "lineitem")
         .repartition(64)
@@ -405,7 +396,7 @@ def maintenance_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats layers materialized.
     """
     run = uuid.uuid4().hex[:8]
-    base = os.path.join(tempfile.mkdtemp(prefix="sgq_cbo_"), "orders")
+    base = os.path.join(scratch_dir("sgq_cbo_"), "orders")
     table = f"sgq_cbo_orders_{run}"
     from ..sources.io import load_table as _lt
 
@@ -694,7 +685,7 @@ def q_maintenance_two_table_atomic_publish(spark: SparkSession, sf_dir: str) -> 
     consistent); the commit point is one rename regardless of how many
     tables or petabytes a snapshot spans.
     """
-    root = tempfile.mkdtemp(prefix="sgq_atomicpub_")
+    root = scratch_dir("sgq_atomicpub_")
     tables = {"a": os.path.join(root, "tables", "a"), "b": os.path.join(root, "tables", "b")}
     manifests = os.path.join(root, "manifests")
     os.makedirs(manifests, exist_ok=True)
@@ -797,7 +788,7 @@ def q_maintenance_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     read cost once write traffic quiets — exactly the trade the two
     paths exist for.
     """
-    root = tempfile.mkdtemp(prefix="sgq_mor_")
+    root = scratch_dir("sgq_mor_")
     # o feeds three independent write actions — checkpointed so the
     # fact scan + projection runs once.
     o = (

@@ -22,7 +22,8 @@ Determinism contract (what makes a streaming job oracle-able):
   whose rows are emitted exactly once for inner joins / first-seen
   dedup.
 
-Each run uses a fresh tmp checkpoint + output dir, so repeated driver
+Each run goes through ``_run_stream``, which gives it a fresh
+``session.scratch_dir`` checkpoint (and output dir), so repeated driver
 invocations reprocess from scratch instead of replaying a foreign
 checkpoint.
 
@@ -35,25 +36,67 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..session import pin
-from ..sources.io import load_table
+from ..session import pin, scratch_dir
+from ..sources.io import load_table, swap_parquet
+
+
+def _run_stream(
+    stream: DataFrame, mode: str, sink=None, checkpoint: str | None = None
+) -> str | None:
+    """Run a streaming frame to completion (``availableNow`` trigger) in
+    output ``mode``, from ``checkpoint`` or else a fresh scratch one.
+
+    With a ``foreachBatch`` function ``sink``, every micro-batch goes
+    through it and None is returned. Without one, the rows go to a
+    parquet file sink in a fresh scratch dir, whose path is returned.
+    """
+    writer = stream.writeStream.outputMode(mode).option(
+        "checkpointLocation", checkpoint or scratch_dir("sgq_stream_ckpt_")
+    )
+    out = None
+    if sink is None:
+        out = scratch_dir("sgq_stream_out_")
+        writer = writer.format("parquet").option("path", out)
+    else:
+        writer = writer.foreachBatch(sink)
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return out
+
+
+def _arrival_stream(spark: SparkSession, schema: str, batches: list) -> DataFrame:
+    """A file stream that reads ``batches`` as one micro-batch each, in
+    list order: each frame is staged as one parquet file in a fresh
+    scratch dir, with file ``i``'s mtime ordered by ``i``, and the
+    stream takes one file per trigger (``maxFilesPerTrigger=1``).
+    """
+    src = scratch_dir("sgq_arrivals_")
+    for i, batch in enumerate(batches):
+        part_dir = os.path.join(src, f"_stage_{i}")
+        batch.coalesce(1).write.parquet(part_dir)
+        part = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
+        dst = os.path.join(src, f"arrival_{i}.parquet")
+        shutil.move(os.path.join(part_dir, part), dst)
+        shutil.rmtree(part_dir)
+        os.utime(dst, (1_700_000_000 + i * 100,) * 2)
+    return (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+    )
 
 
 def _stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Copy the events parquet into a fresh tmp dir.
+    """Copy the events parquet into a fresh scratch dir.
 
     The streaming file source tracks *directories*; staging gives each
     run an isolated append-only source dir (and mirrors how log/CDC
     drops arrive in production: files landing in a watched prefix).
     """
     src = os.path.join(sf_dir, "events.parquet")
-    d = tempfile.mkdtemp(prefix="sgq_stream_src_")
+    d = scratch_dir("sgq_stream_src_")
     if os.path.isdir(src):
         for f in os.listdir(src):
             if f.endswith(".parquet"):
@@ -96,8 +139,7 @@ def stream_hourly_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .upsert import upsert_parquet
 
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="sgq_stream_ckpt_")
-    report = os.path.join(tempfile.mkdtemp(prefix="sgq_stream_out_"), "report")
+    report = os.path.join(scratch_dir("sgq_stream_out_"), "report")
 
     events = read_events_stream(spark, src)
     rollup = hourly_rollup_stream(events, watermark="365 days")
@@ -105,14 +147,7 @@ def stream_hourly_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         upsert_parquet(spark, report, batch_df, keys=["window_start", "event_type"])
 
-    (
-        rollup.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_stream(rollup, "update", _merge)
     return spark.read.parquet(report).select(
         "window_start", "event_type", "n_events", "total_value"
     )
@@ -145,9 +180,6 @@ def stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.incremental import read_events_stream
 
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="sgq_dedup_ckpt_")
-    out = os.path.join(tempfile.mkdtemp(prefix="sgq_dedup_out_"), "deduped")
-
     events = read_events_stream(spark, src)
     deduped = (
         events.select("user_id", "event_type", "ts")
@@ -155,15 +187,7 @@ def stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .option("path", out)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    out = _run_stream(deduped, "append")
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -204,24 +228,13 @@ def stream_click_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..streaming.incremental import click_to_purchase_stream
 
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="sgq_join_ckpt_")
-    out = os.path.join(tempfile.mkdtemp(prefix="sgq_join_out_"), "attributed")
-
     joined = click_to_purchase_stream(spark, src).select(
         "purchase_id",
         "click_id",
         "user_id",
         F.col("purchase_value").cast("decimal(18,4)").cast("double").alias("purchase_value"),
     )
-    (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .option("path", out)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    out = _run_stream(joined, "append")
     return spark.read.parquet(out).select(
         "purchase_id", "click_id", "user_id", "purchase_value"
     )
@@ -268,7 +281,7 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .upsert import apply_cdc_parquet
 
-    target = os.path.join(tempfile.mkdtemp(prefix="sgq_cdc_tgt_"), "users")
+    target = os.path.join(scratch_dir("sgq_cdc_tgt_"), "users")
 
     log = (
         load_table(spark, sf_dir, "events")
@@ -364,26 +377,17 @@ def stream_session_windows_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.incremental import read_events_stream, session_rollup_stream
 
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="sgq_sess_ckpt_")
-    out = os.path.join(tempfile.mkdtemp(prefix="sgq_sess_out_"), "sessions")
-
     events = read_events_stream(spark, src)
     sess = session_rollup_stream(events, gap="30 minutes", watermark="1 hour")
-    (
+    out = _run_stream(
         sess.select(
             "session_start",
             "session_end",
             "user_id",
             "n_events",
             F.col("total_value").cast("decimal(18,4)").cast("double").alias("total_value"),
-        )
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .option("path", out)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        "append",
     )
     return spark.read.parquet(out).select(
         "session_start", "session_end", "user_id", "n_events", "total_value"
@@ -415,21 +419,10 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.incremental import enriched_events_stream
 
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="sgq_enrich_ckpt_")
-    out = os.path.join(tempfile.mkdtemp(prefix="sgq_enrich_out_"), "enriched")
-
     enriched = enriched_events_stream(spark, src, sf_dir).select(
         "event_id", "user_id", "event_type", "c_name", "c_mktsegment"
     )
-    (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("parquet")
-        .option("path", out)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    out = _run_stream(enriched, "append")
     return spark.read.parquet(out).select(
         "event_id", "user_id", "event_type", "c_name", "c_mktsegment"
     )
@@ -468,8 +461,7 @@ def stream_bot_burst_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.incremental import read_events_stream
 
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="sgq_burst_ckpt_")
-    state = os.path.join(tempfile.mkdtemp(prefix="sgq_burst_out_"), "peaks")
+    state = os.path.join(scratch_dir("sgq_burst_out_"), "peaks")
 
     events = read_events_stream(spark, src)
     counts = (
@@ -484,9 +476,6 @@ def stream_bot_burst_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # max-merge into the standing table; first batch detected by
         # PATH EXISTENCE — a transient read failure on a later batch
         # must propagate, never silently reset accumulated peaks
-        import shutil as _shutil
-        import uuid as _uuid
-
         cand = batch_df.groupBy("user_id").agg(F.max("n").alias("peak_5min"))
         if os.path.exists(state):
             old = spark.read.parquet(state)
@@ -498,26 +487,11 @@ def stream_bot_burst_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             merged = cand
         # merged already folds the old state, so a keyed upsert's
-        # anti-join would be provably empty work: stage + swap directly
-        # (same copy-on-write protocol as upsert.py:45)
-        staging = f"{state}__staging_{_uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(staging)
-        backup = f"{state}__old_{_uuid.uuid4().hex[:8]}"
-        if os.path.exists(state):
-            os.rename(state, backup)
-            os.rename(staging, state)
-            _shutil.rmtree(backup)
-        else:
-            os.rename(staging, state)
+        # anti-join would be provably empty work: swap it in directly
+        # (``swap_parquet``, the commit ``upsert_parquet`` ends with)
+        swap_parquet(merged, state)
 
-    (
-        counts.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_stream(counts, "update", _merge)
     return (
         spark.read.parquet(state)
         .select(
@@ -579,8 +553,6 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the semantics that bounds state: without the
     drop, the hourly state grows with the full reorder horizon of the
     source; with it, state is (watermark horizon × key cardinality)."""
-    import uuid as _uuid
-
     ev = load_table(spark, sf_dir, "events")
     mn = ev.agg(F.min("ts")).collect()[0][0]  # O(1) bookmark-style scalar
     if mn is None:  # empty relation (no-new-rows incremental run): any
@@ -595,36 +567,17 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tagged = ev.withColumn("wk", F.least(wk, F.lit(3)))
 
-    src = tempfile.mkdtemp(prefix="sgq_late_src_")
-    for arrival, week in enumerate([2, 3, 0, 1]):
-        part_dir = os.path.join(src, f"_stage_{week}")
-        tagged.filter(F.col("wk") == week).select("event_id", "ts").coalesce(
-            1
-        ).write.parquet(part_dir)
-        part = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"arrival_{arrival}.parquet")
-        shutil.move(os.path.join(part_dir, part), dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (1_700_000_000 + arrival * 100,) * 2)
-
-    ckpt = tempfile.mkdtemp(prefix="sgq_late_ck_") + f"/{_uuid.uuid4().hex[:8]}"
-    out = tempfile.mkdtemp(prefix="sgq_late_out_")
-    stream = (
-        spark.readStream.schema("event_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    arrivals = [tagged.filter(F.col("wk") == week) for week in (2, 3, 0, 1)]
+    stream = _arrival_stream(
+        spark,
+        "event_id bigint, ts timestamp",
+        [batch.select("event_id", "ts") for batch in arrivals],
     )
-    (
+    out = _run_stream(
         stream.withWatermark("ts", "7 days")
         .groupBy(F.window("ts", "1 hour"))
-        .agg(F.count("*").alias("n_events"))
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .agg(F.count("*").alias("n_events")),
+        "append",
     )
     dropped = tagged.filter(F.col("wk") < 2).agg(
         F.count("*").alias("n_dropped_late")
@@ -686,46 +639,20 @@ def stream_stateful_hwm_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: state is ONE int64 per user (O(keys), never O(events)),
     Arrow-batched per key — this is the pattern that makes exactly-once
     ingestion from an at-least-once bus cheap."""
-    import uuid as _uuid
-
     from ..streaming.stateful import hwm_dedup_stream
 
-    ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="sgq_hwm_src_")
-    batches = [
-        ev.filter(F.col("event_id") % 3 != 0),  # partial first delivery
-        ev,  # full redelivery
-    ]
-    for i, b in enumerate(batches):
-        part_dir = os.path.join(src, f"_stage_{i}")
-        b.select("user_id", "event_id", "event_type", "value").coalesce(1).write.parquet(
-            part_dir
-        )
-        part = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"delivery_{i}.parquet")
-        shutil.move(os.path.join(part_dir, part), dst)
-        shutil.rmtree(part_dir)
-        os.utime(dst, (1_700_000_000 + i * 100,) * 2)
-
-    ckpt = tempfile.mkdtemp(prefix="sgq_hwm_ck_") + f"/{_uuid.uuid4().hex[:8]}"
-    out = tempfile.mkdtemp(prefix="sgq_hwm_out_")
-    stream = (
-        spark.readStream.schema(
-            "user_id bigint, event_id bigint, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_id", "event_type", "value"
     )
-    (
-        hwm_dedup_stream(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    stream = _arrival_stream(
+        spark,
+        "user_id bigint, event_id bigint, event_type string, value double",
+        [
+            ev.filter(F.col("event_id") % 3 != 0),  # partial first delivery
+            ev,  # full redelivery
+        ],
     )
+    out = _run_stream(hwm_dedup_stream(stream), "append")
     return (
         spark.read.parquet(out)
         .groupBy("user_id")
@@ -778,7 +705,7 @@ def stream_sliding_complete_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark.
     """
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="sgq_stream_ckpt_")
+    ckpt = scratch_dir("sgq_stream_ckpt_")
     qname = "sgq_sliding_complete_" + os.path.basename(ckpt).split("_")[-1]
 
     schema = load_table(spark, sf_dir, "events").schema
@@ -844,9 +771,9 @@ def stream_restart_resume_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .upsert import upsert_parquet
 
-    src = tempfile.mkdtemp(prefix="sgq_resume_src_")
-    ckpt = tempfile.mkdtemp(prefix="sgq_resume_ckpt_")
-    report = os.path.join(tempfile.mkdtemp(prefix="sgq_resume_out_"), "report")
+    src = scratch_dir("sgq_resume_src_")
+    ckpt = scratch_dir("sgq_resume_ckpt_")  # shared by both runs
+    report = os.path.join(scratch_dir("sgq_resume_out_"), "report")
 
     ev = load_table(spark, sf_dir, "events")
     schema = ev.schema
@@ -866,14 +793,7 @@ def stream_restart_resume_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _merge(batch_df: DataFrame, batch_id: int) -> None:
             upsert_parquet(spark, report, batch_df, keys=["day", "event_type"])
 
-        (
-            rollup.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(_merge)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        _run_stream(rollup, "update", _merge, checkpoint=ckpt)
 
     ev.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(src)
     run_once()
@@ -1107,8 +1027,7 @@ def stream_sink_batchid_idempotence(spark: SparkSession, sf_dir: str) -> DataFra
     import json
 
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="sgq_idem_ckpt_")
-    out_root = tempfile.mkdtemp(prefix="sgq_idem_out_")
+    out_root = scratch_dir("sgq_idem_out_")
     sink = os.path.join(out_root, "sink")
     txlog = os.path.join(out_root, "committed.json")
 
@@ -1135,20 +1054,16 @@ def stream_sink_batchid_idempotence(spark: SparkSession, sf_dir: str) -> DataFra
     from ..sources.io import events_validity_gate
 
     schema = load_table(spark, sf_dir, "events").schema
-    (
+    _run_stream(
         # src is a RAW file copy — re-apply the ingest gate stream-side
         # (sources/io.py) so the sink matches the oracle's gated view.
         events_validity_gate(
             spark.readStream.schema(schema)
             .option("pathGlobFilter", "*.parquet")
             .parquet(src)
-        )
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(capture)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        "append",
+        capture,
     )
 
     n_before = spark.read.parquet(sink).count()

@@ -8,19 +8,19 @@ key replaces the old one, unseen keys append.
 
 Plain parquet has no row-level transaction log (that's Delta/Iceberg),
 so the merge is copy-on-write: ``target ⟕anti updates ∪ updates``
-rewritten atomically via a staging directory rename. At scale you would
-partition the target and rewrite only partitions containing updated
-keys (dynamic partition overwrite — see tests/test_sinks.py); table
-formats with merge-on-read take it from there.
+written out and swapped in by ``sources.io.swap_parquet``. At scale
+you would partition the target and rewrite only partitions containing
+updated keys (dynamic partition overwrite — see tests/test_sinks.py);
+table formats with merge-on-read take it from there.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.io import swap_parquet
 
 
 def upsert_parquet(
@@ -31,9 +31,8 @@ def upsert_parquet(
 ) -> None:
     """MERGE ``updates`` into the parquet table at ``target_dir`` by key.
 
-    Last-writer-wins per key. Copy-on-write: the merged result lands in
-    a staging dir, then swaps in (rename is atomic on posix local/ HDFS;
-    object stores need a manifest commit instead).
+    Last-writer-wins per key. Copy-on-write: the merged result replaces
+    the target through ``swap_parquet``.
     """
     if os.path.exists(target_dir):
         target = spark.read.parquet(target_dir)
@@ -41,16 +40,7 @@ def upsert_parquet(
         merged = kept.unionByName(updates)
     else:
         merged = updates
-
-    staging = f"{target_dir}__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    # the read above is fully materialized by the write; swap dirs
-    backup = f"{target_dir}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(target_dir):
-        os.rename(target_dir, backup)
-    os.rename(staging, target_dir)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
+    swap_parquet(merged, target_dir)
 
 
 def apply_cdc_parquet(
@@ -96,12 +86,4 @@ def apply_cdc_parquet(
         merged = kept.unionByName(surviving)
     else:
         merged = surviving
-
-    staging = f"{target_dir}__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    backup = f"{target_dir}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(target_dir):
-        os.rename(target_dir, backup)
-    os.rename(staging, target_dir)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
+    swap_parquet(merged, target_dir)

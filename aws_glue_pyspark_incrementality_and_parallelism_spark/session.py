@@ -9,7 +9,11 @@ large cluster (tested on local[N]).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import Observation, SparkSession
 
@@ -26,6 +30,28 @@ POOL_SUBSCRIPTIONS_REPORT = "2"
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+_scratch_lock = threading.Lock()
+_scratch_root: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh, empty directory for one query's staged files (fixtures,
+    stream sources, checkpoints, sinks), named ``prefix`` + a random tail.
+
+    Every such directory lives under one root per process, made on first
+    use in ``tempfile``'s temp dir (``TMPDIR``) and removed with all it
+    holds at interpreter exit. A query may therefore return a lazy frame
+    over its directory: the files stay readable for the life of the
+    process, and none outlive it.
+    """
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="sgq_")
+            atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
 
 
 def observed(obs, zeros: dict) -> dict:
@@ -56,21 +82,17 @@ def pin(df, eager: bool = True):
 
     Production path: set ``SPARK_GRAFT_RELIABLE_PIN=1`` to switch every
     pin site to reliable ``checkpoint()`` — replicated, durable blocks
-    on the checkpoint dir (``SPARK_GRAFT_CHECKPOINT_DIR``, or a temp
-    dir is defaulted so the knob works out of the box; point it at
+    on the checkpoint dir (``SPARK_GRAFT_CHECKPOINT_DIR``, else a
+    ``scratch_dir`` so the knob works out of the box; point it at
     durable shared storage on a real cluster). Same plan shape either
     way; results are identical by construction. See SCALING.md.
     """
     if os.environ.get("SPARK_GRAFT_RELIABLE_PIN"):
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
-            import tempfile
-
             sc.setCheckpointDir(
-                os.environ.get(
-                    "SPARK_GRAFT_CHECKPOINT_DIR",
-                    tempfile.mkdtemp(prefix="spark-graft-ckpt-"),
-                )
+                os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+                or scratch_dir("sgq_ckpt_")
             )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

@@ -12,6 +12,8 @@ source or sink is a plain ``spark.read.format("jdbc")`` /
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -353,3 +355,22 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+def swap_parquet(df: DataFrame, path: str) -> None:
+    """Replace the parquet directory ``path`` (created if absent) with
+    ``df``, copy-on-write: write ``df`` to a staging dir beside ``path``,
+    rename the old dir aside, rename the staging dir in, remove the old
+    dir. ``df`` may read ``path`` itself; the write materializes it
+    before the swap. A rename is atomic on a posix local fs and on HDFS;
+    object stores need a manifest commit instead.
+    """
+    tag = uuid.uuid4().hex[:8]
+    staging, old = f"{path}__staging_{tag}", f"{path}__old_{tag}"
+    df.write.mode("overwrite").parquet(staging)
+    replacing = os.path.exists(path)
+    if replacing:
+        os.rename(path, old)
+    os.rename(staging, path)
+    if replacing:
+        shutil.rmtree(old)

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 from aws_glue_pyspark_incrementality_and_parallelism_spark.operators import multimodal
 from aws_glue_pyspark_incrementality_and_parallelism_spark.parallel import ReportJob, run_concurrent
 from aws_glue_pyspark_incrementality_and_parallelism_spark.plans import catalog
-from aws_glue_pyspark_incrementality_and_parallelism_spark.session import build_spark
+from aws_glue_pyspark_incrementality_and_parallelism_spark.session import build_spark, scratch_dir
 from perfbench.trace import HostStamp
 
 #: Sequential phase: a 3-deep query pool on 8 shuffle partitions (see
@@ -62,10 +62,7 @@ def _stream_warmup(spark) -> None:
     streaming machinery (micro-batch engine, state-store provider,
     streaming codegen paths) initializes OUTSIDE the per-query timings —
     the ~7 s first-stream cost is session setup, not query cost."""
-    import shutil
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="sgb_stream_warm_")
+    base = scratch_dir("sgb_stream_warm_")
     src = os.path.join(base, "src")
     spark.range(8).selectExpr(
         "id", "timestamp'2024-01-01' + make_interval(0,0,0,0,0,0,id) AS ts"
@@ -78,7 +75,6 @@ def _stream_warmup(spark) -> None:
         .option("checkpointLocation", os.path.join(base, "ckpt"))
         .trigger(availableNow=True).start().awaitTermination()
     )
-    shutil.rmtree(base, ignore_errors=True)
 
 
 _FRESH_PROG = """

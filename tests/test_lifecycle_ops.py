@@ -207,16 +207,15 @@ def test_observe_metrics_match_direct_aggregate(spark):
     assert out.revenue_cents == direct.cents
 
 
-def test_sorted_layout_disjointness_audit_is_real(spark):
+def test_sorted_layout_disjointness_audit_is_real(spark, tmp_path):
     """Negative control for layout_sorted_files: the same audit run over
     a HASH-partitioned (unsorted, interleaved) write reports overlap —
     i.e. ranges_disjoint TRUE is a property of the range layout, not an
     artifact of the audit loop."""
     import os
-    import tempfile
 
     orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    out = os.path.join(tempfile.mkdtemp(prefix="sgq_unsorted_"), "orders")
+    out = str(tmp_path / "orders")
     orders.repartition(8, "o_orderkey").write.mode("overwrite").parquet(out)
     files = [os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")]
     stats = []

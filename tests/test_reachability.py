@@ -118,3 +118,22 @@ def test_allowlist_only_shrinks():
     assert not now_reached, (
         f"allowlisted defs are reached now; drop them from the list: {now_reached}"
     )
+
+
+def test_scratch_dirs_come_only_from_session():
+    """Every query-scoped directory comes from ``session.scratch_dir``,
+    whose per-process root is removed at interpreter exit. A temp dir
+    made anywhere else in the package is one that nothing removes."""
+    banned = {"mkdtemp", "TemporaryDirectory"}
+    owner = os.path.join(REPO_ROOT, PACKAGE, "session.py")
+    calls = []
+    for path in _py_files(PACKAGE):
+        if path == owner:
+            continue
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name in banned:
+                    calls.append(f"{os.path.relpath(path, REPO_ROOT)}:{node.lineno}")
+    assert not calls, f"temp dirs made outside session.scratch_dir: {calls}"
