@@ -23,19 +23,12 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--sf-dir", default=DEFAULT_SF_DIR, help="testdata directory")
     parser.add_argument("--output", required=True, help="report output directory")
     parser.add_argument("--bookmarks", default=None, help="bookmark state file path")
-    parser.add_argument("--single-file", action="store_true", help="coalesce outputs to 1 file")
     args = parser.parse_args(argv)
 
     logging.basicConfig(level=logging.INFO, format="%(asctime)s %(name)s %(message)s")
     spark = build_spark(app_name="engine-etl")
     log.info("starting incremental ETL: sf_dir=%s output=%s", args.sf_dir, args.output)
-    result = pipeline.run_etl(
-        spark,
-        args.sf_dir,
-        args.output,
-        bookmark_path=args.bookmarks,
-        single_file_outputs=args.single_file,
-    )
+    result = pipeline.run_etl(spark, args.sf_dir, args.output, bookmark_path=args.bookmarks)
     if not result.report_rows:
         log.info("no new rows above bookmark %s; nothing to do", result.committed_hwm)
     else:

@@ -47,7 +47,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from .sources.incremental import BookmarkStore, IncrementalBatch, incremental_read
-from .sources.io import load_table, write_parquet
+from .sources.io import load_table, swap_parquet
 
 
 class DynamicFrameShim:
@@ -243,10 +243,12 @@ class _DynamicFrameWriter:
     ) -> None:
         """Sink (glue_rds_to_redshift.py:86-92). ``dbtable`` maps to the
         output subdirectory under the context's output_dir; Redshift's
-        staging/preactions machinery has no analog on a parquet sink."""
+        staging/preactions machinery has no analog on a parquet sink.
+        The write replaces the table's directory through ``swap_parquet``,
+        so a failed write leaves the previous output in place."""
         opts = connection_options or {}
         table = opts.get("dbtable", frame.name or "output")
-        write_parquet(frame.df, f"{self._ctx.output_dir}/{table}", mode="overwrite")
+        swap_parquet(frame.df, f"{self._ctx.output_dir}/{table}")
 
 
 class GlueCompatContext:

@@ -404,7 +404,7 @@ def q_source_python_datasource_agg(spark: SparkSession, sf_dir: str) -> DataFram
     """Batch read through the PySpark Python Data Source API
     (``spark.read.format("synthetic_events")``, sources/pysource.py) —
     the engine's extension point for sources Spark has no connector
-    for, the batch twin of the streaming reader pytest already pins.
+    for.
 
     The oracle replays the connector's PUBLIC generation contract (row
     i = splitmix64(seed xor i), documented in the module) entirely in

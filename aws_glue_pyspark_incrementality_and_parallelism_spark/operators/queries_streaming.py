@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -307,9 +308,7 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         log.filter(F.col("last_event_id") <= F.lit(mid)),
         log.filter(F.col("last_event_id") > F.lit(mid)),
     ):
-        apply_cdc_parquet(
-            spark, target, part, keys=["user_id"], op_col="op", seq_col="__seq"
-        )
+        apply_cdc_parquet(spark, target, part, keys=["user_id"], seq_col="__seq")
     return spark.read.parquet(target).select(
         "user_id", "last_event_id", "last_ts", "last_event_type", "last_value"
     )
@@ -705,8 +704,7 @@ def stream_sliding_complete_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark.
     """
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = scratch_dir("sgq_stream_ckpt_")
-    qname = "sgq_sliding_complete_" + os.path.basename(ckpt).split("_")[-1]
+    qname = f"sgq_sliding_complete_{uuid.uuid4().hex}"
 
     schema = load_table(spark, sf_dir, "events").schema
     from ..sources.io import events_validity_gate
@@ -727,14 +725,18 @@ def stream_sliding_complete_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         rollup.writeStream.outputMode("complete")
         .format("memory")
         .queryName(qname)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", scratch_dir("sgq_stream_ckpt_"))
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
     )
-    return spark.table(qname).select(
-        F.col("w.start").alias("window_start"), "n_events", "total_value"
+    # The memory sink's table lives as long as its temp view: pin the
+    # result, then drop the view so no call leaves a table behind.
+    result = pin(
+        spark.table(qname).select(F.col("w.start").alias("window_start"), "n_events", "total_value")
     )
+    spark.catalog.dropTempView(qname)
+    return result
 
 
 @query(

@@ -26,10 +26,41 @@ Scale notes (100 TB stance):
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import session
 from ..sources.io import load_table
+
+
+@dataclass(frozen=True)
+class ReportSpec:
+    """One grouped-sum report: revenue per (id, name, day), where the
+    day is ``day_col`` truncated to a date and named ``day``; ``pool`` is
+    the FAIR pool the ETL writes it from."""
+
+    name: str
+    keys: tuple[str, str]
+    day_col: str
+    day: str
+    pool: str
+
+    def aggregate(self, df: DataFrame) -> DataFrame:
+        return df.groupBy(*self.keys, F.to_date(self.day_col).alias(self.day)).agg(
+            F.round(F.sum("l_extendedprice"), 2).alias("total")
+        )
+
+
+SALES_BY_CUSTOMER = ReportSpec(
+    "sales_by_customer", ("c_custkey", "c_name"), "o_orderdate", "order_date", session.POOL_USERS_REPORT
+)
+SALES_BY_SUPPLIER = ReportSpec(
+    "sales_by_supplier", ("s_suppkey", "s_name"), "l_shipdate", "ship_date", session.POOL_SUBSCRIPTIONS_REPORT
+)
+#: The ETL's reports, in the order ``run_etl`` submits them.
+REPORTS = (SALES_BY_CUSTOMER, SALES_BY_SUPPLIER)
 
 
 def joined_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,11 +106,7 @@ def sales_by_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (glue_rds_to_redshift.py:62, bug-corrected per SURVEY §8 B6):
     groupBy(account, holder name, date) → sum(amount).
     """
-    return (
-        joined_sales(spark, sf_dir)
-        .groupBy("c_custkey", "c_name", F.to_date("o_orderdate").alias("order_date"))
-        .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
-    )
+    return SALES_BY_CUSTOMER.aggregate(joined_sales(spark, sf_dir))
 
 
 def sales_by_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,10 +120,8 @@ def sales_by_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey", "l_extendedprice", "l_shipdate"
     )
     supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
+    return SALES_BY_SUPPLIER.aggregate(
         lineitem.join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey, "inner")
-        .groupBy("s_suppkey", "s_name", F.to_date("l_shipdate").alias("ship_date"))
-        .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
     )
 
 

@@ -10,8 +10,9 @@ Plain parquet has no row-level transaction log (that's Delta/Iceberg),
 so the merge is copy-on-write: ``target ⟕anti updates ∪ updates``
 written out and swapped in by ``sources.io.swap_parquet``. At scale
 you would partition the target and rewrite only partitions containing
-updated keys (dynamic partition overwrite — see tests/test_sinks.py);
-table formats with merge-on-read take it from there.
+updated keys (Spark's dynamic partition overwrite,
+``spark.sql.sources.partitionOverwriteMode=dynamic``); table formats
+with merge-on-read take it from there.
 """
 
 from __future__ import annotations
@@ -48,12 +49,11 @@ def apply_cdc_parquet(
     target_dir: str,
     changes: DataFrame,
     keys: list[str],
-    op_col: str = "op",
     seq_col: str | None = None,
 ) -> None:
     """Apply a CDC batch (insert/update/delete) to the parquet target.
 
-    ``changes`` carries an ``op_col`` of 'I'/'U'/'D' (case-insensitive).
+    ``changes`` carries an ``op`` column of 'I'/'U'/'D' (case-insensitive).
     When one key appears multiple times in the batch, ``seq_col`` (a
     monotonically increasing change sequence, e.g. binlog position)
     picks the LAST change per key — applying a whole day's changelog in
@@ -76,8 +76,8 @@ def apply_cdc_parquet(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-    is_delete = F.upper(F.col(op_col)) == "D"
-    surviving = changes.filter(~is_delete).drop(op_col, *([seq_col] if seq_col else []))
+    is_delete = F.upper(F.col("op")) == "D"
+    surviving = changes.filter(~is_delete).drop("op", *([seq_col] if seq_col else []))
     doomed_keys = changes.select(*keys)  # every changed key leaves the old version
 
     if os.path.exists(target_dir):

@@ -7,22 +7,27 @@ Stages (reference line refs in parens):
    (:28-40, service bookmarks → explicit state, SURVEY §8 B8/B10 fixed)
 2. rename → 3-way join → projection (:44-47, typo'd keys B4/B5 fixed)
 3. cache the joined frame once for both reports (:48)
-4. two grouped-sum reports submitted concurrently to FAIR pools
-   (:52-55, missing-method/unawaited-futures B2/B3 fixed)
+4. two grouped-sum reports (``operators.reports.REPORTS``) submitted
+   concurrently to FAIR pools (:52-55, missing-method/unawaited-futures
+   B2/B3 fixed)
 5. parquet sinks, one flat directory of part files per report, each
-   report's row count observed on its write (the reference writes to
-   Redshift; :86-92)
+   replaced through ``sources.io.swap_parquet`` with its row count
+   observed on the write (the reference writes to Redshift; :86-92)
 6. bookmark commit AFTER both sinks succeed (B10 fixed)
 
+Each run replaces each report with its own slice's aggregates, so a
+run that admits new rows over a standing report drops the earlier
+groups until the merge step (ROADMAP item 1) lands. The sink works on a
+local file system only (``swap_parquet`` renames directories).
+
 At scale: the joined frame is cached MEMORY_AND_DISK (it feeds two
-actions); sinks are not partitioned, and ``single_file_outputs``
-replaces the reference's repartition(1) with a shuffle-free coalesce(1);
-the HWM commit is the transaction boundary, so a crash re-runs one
-idempotent slice.
+actions); sinks are not partitioned; the HWM commit is the transaction
+boundary.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
@@ -32,13 +37,14 @@ from typing import Any
 
 log = logging.getLogger("engine.pipeline")
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from . import parallel, session
+from .operators.reports import REPORTS, ReportSpec
 from .sources.incremental import BookmarkStore, incremental_read
-from .sources.io import load_table, write_parquet
+from .sources.io import load_table, swap_parquet
 
 
 @dataclass
@@ -54,11 +60,17 @@ def run_etl(
     sf_dir: str,
     output_dir: str,
     bookmark_path: str | None = None,
-    single_file_outputs: bool = False,
 ) -> PipelineResult:
-    """One incremental run of the two-report ETL. Re-runnable: each run
-    processes only fact rows above the committed bookmark and overwrites
-    its own output slice (idempotent sink + commit-after-write).
+    """One incremental run of the two-report ETL: the fact rows above
+    the committed bookmark, joined and aggregated into both reports,
+    then the bookmark commit.
+
+    Each report directory under ``output_dir`` (a local path) is
+    replaced with this slice's aggregates alone, so a run that admits
+    new rows over a standing report drops the earlier runs' groups
+    until the merge step of ROADMAP item 1 lands. A run with no new
+    rows writes nothing. A sink that fails leaves its report and the
+    bookmark as they were, and a rerun recomputes the same slice.
 
     ``metrics`` holds the run record, also logged as one JSON line: the
     bookmark before and after (``hwm_before``, ``hwm_after``), the rows
@@ -125,45 +137,25 @@ def run_etl(
     # One materialization feeding both report actions (reference :48).
     joined = joined.persist(StorageLevel.MEMORY_AND_DISK)
 
-    paths = {
-        "sales_by_customer": os.path.join(output_dir, "sales_by_customer"),
-        "sales_by_supplier": os.path.join(output_dir, "sales_by_supplier"),
-    }
+    paths = {spec.name: os.path.join(output_dir, spec.name) for spec in REPORTS}
 
-    def _write_report(name: str, df: DataFrame) -> int:
+    def _write_report(spec: ReportSpec) -> int:
         """Write one report; its row count is observed on the write."""
         rows = Observation()
-        write_parquet(
-            df.observe(rows, F.count(F.lit(1)).alias("rows")),
-            paths[name],
-            single_file=single_file_outputs,
+        swap_parquet(
+            spec.aggregate(joined).observe(rows, F.count(F.lit(1)).alias("rows")),
+            paths[spec.name],
         )
         return session.observed(rows, {"rows": 0})["rows"]
 
-    def _customer_report() -> int:
-        df = (
-            joined.groupBy("c_custkey", "c_name", F.to_date("o_orderdate").alias("order_date"))
-            .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
-        )
-        return _write_report("sales_by_customer", df)
-
-    def _supplier_report() -> int:
-        df = (
-            joined.groupBy("s_suppkey", "s_name", F.to_date("l_shipdate").alias("ship_date"))
-            .agg(F.round(F.sum("l_extendedprice"), 2).alias("total"))
-        )
-        return _write_report("sales_by_supplier", df)
-
-    log.info("running 2 reports concurrently (FAIR pools %s/%s)",
-             session.POOL_USERS_REPORT, session.POOL_SUBSCRIPTIONS_REPORT)
+    log.info("running %d reports concurrently (FAIR pools %s)",
+             len(REPORTS), "/".join(spec.pool for spec in REPORTS))
     try:
         results = parallel.run_concurrent(
             spark,
             [
-                parallel.ReportJob("sales_by_customer", _customer_report, session.POOL_USERS_REPORT),
-                parallel.ReportJob(
-                    "sales_by_supplier", _supplier_report, session.POOL_SUBSCRIPTIONS_REPORT
-                ),
+                parallel.ReportJob(spec.name, functools.partial(_write_report, spec), spec.pool)
+                for spec in REPORTS
             ],
         )
     finally:

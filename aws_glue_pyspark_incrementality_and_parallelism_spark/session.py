@@ -69,7 +69,7 @@ def observed(obs, zeros: dict) -> dict:
     return obs.get
 
 
-def pin(df, eager: bool = True):
+def pin(df):
     """Materialize a DataFrame and cut its lineage — the repo-wide
     pinning primitive for iterative loops (``iterate``, PageRank,
     k-means, Markov) and multi-axis distrank rewrites. Use as
@@ -94,8 +94,8 @@ def pin(df, eager: bool = True):
                 os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
                 or scratch_dir("sgq_ckpt_")
             )
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 def iterate(state, step, signature, max_rounds: int):
@@ -187,7 +187,6 @@ def build_spark(
     app_name: str = "aws-glue-pyspark-incrementality-and-parallelism-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    fair: bool = True,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -219,10 +218,9 @@ def build_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.scheduler.mode": "FAIR",
+        "spark.scheduler.allocation.file": FAIR_SCHEDULER_XML,
     }
-    if fair:
-        conf["spark.scheduler.mode"] = "FAIR"
-        conf["spark.scheduler.allocation.file"] = FAIR_SCHEDULER_XML
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

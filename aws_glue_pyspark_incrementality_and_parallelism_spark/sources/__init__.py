@@ -1,4 +1,4 @@
-from .io import DEFAULT_SF_DIR, TABLES, load_table, register_views, table_path, write_parquet
+from .io import DEFAULT_SF_DIR, TABLES, load_table, register_views, table_path
 
 __all__ = [
     "DEFAULT_SF_DIR",
@@ -6,5 +6,4 @@ __all__ = [
     "load_table",
     "register_views",
     "table_path",
-    "write_parquet",
 ]

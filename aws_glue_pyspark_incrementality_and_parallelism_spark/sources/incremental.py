@@ -13,8 +13,8 @@ Spark-first rebuild: the bookmark is an ordinary filter predicate
 (visible as PushedFilters in .explain), plus a tiny JSON state store
 committed only AFTER the sink succeeds. Crash between write and commit
 ⇒ rerun re-processes the same slice; pair with an idempotent sink
-(overwrite a deterministic output path / partition) for exactly-once
-output.
+(replace a deterministic output path, as ``sources.io.swap_parquet``
+does) for exactly-once output.
 
 Known semantic (same as Glue, documented in SURVEY §7): an in-place
 UPDATE to an already-seen key is skipped. Callers that need update
@@ -73,15 +73,6 @@ class BookmarkStore:
     def commit(self, source: str, hwm: Any) -> None:
         state = self._load()
         state[source] = hwm
-        self._save(state)
-
-    def reset(self, source: str | None = None) -> None:
-        if source is None:
-            if os.path.exists(self.path):
-                os.remove(self.path)
-            return
-        state = self._load()
-        state.pop(source, None)
         self._save(state)
 
 
@@ -148,12 +139,12 @@ def composite_gt(keys: list[str], hwm: list[Any]):
             f"composite_gt: hwm must be a list matching keys={keys}, got "
             f"{type(hwm).__name__} — a scalar bookmark committed by an "
             "earlier single-key run cannot drive a composite-key read "
-            "(bookmark key set changed; reset the bookmark)"
+            "(bookmark key set changed; delete the stored bookmark)"
         )
     if len(keys) != len(hwm):
         raise ValueError(
             f"composite_gt: {len(keys)} keys but {len(hwm)} HWM components "
-            "(bookmark key set changed; reset the bookmark)"
+            "(bookmark key set changed; delete the stored bookmark)"
         )
     pred = F.col(keys[-1]) > F.lit(hwm[-1])
     for k, h in zip(reversed(keys[:-1]), reversed(hwm[:-1])):
@@ -185,19 +176,3 @@ def incremental_read(
         sliced = df.filter(composite_gt(list(key), hwm))
     return IncrementalBatch(df=sliced, source=source, key=key, store=store)
 
-
-def run_incremental(
-    batch: IncrementalBatch,
-    write_fn,
-) -> Any:
-    """filter → write → commit-HWM, in that order (fixes SURVEY §8 B10).
-
-    ``write_fn(df)`` must be idempotent (e.g. overwrite a deterministic
-    path) so a crash after write but before commit is safe to rerun.
-    Returns the committed HWM (None if the batch was empty).
-    """
-    hwm = batch.pending_hwm()
-    if hwm is None:
-        return None
-    write_fn(batch.df)
-    return batch.commit()

@@ -335,39 +335,25 @@ def read_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.orc(path)
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    single_file: bool = False,
-) -> None:
-    """Parquet sink.
-
-    ``single_file=True`` mirrors the reference's ``repartition(1)``
-    (/root/reference/glue_rds_to_redshift.py:62,74) but uses
-    ``coalesce(1)`` — no extra shuffle. At 100 TB you never do this;
-    partitioned writes are the default path.
-    """
-    if single_file:
-        df = df.coalesce(1)
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def swap_parquet(df: DataFrame, path: str) -> None:
     """Replace the parquet directory ``path`` (created if absent) with
     ``df``, copy-on-write: write ``df`` to a staging dir beside ``path``,
     rename the old dir aside, rename the staging dir in, remove the old
     dir. ``df`` may read ``path`` itself; the write materializes it
-    before the swap. A rename is atomic on a posix local fs and on HDFS;
+    before the swap. A write that fails removes its staging dir and
+    leaves ``path`` as it was.
+
+    ``path`` is a local file system path: the swap is two ``os.rename``
+    calls, each atomic on a posix file system. HDFS has the same rename;
     object stores need a manifest commit instead.
     """
     tag = uuid.uuid4().hex[:8]
     staging, old = f"{path}__staging_{tag}", f"{path}__old_{tag}"
-    df.write.mode("overwrite").parquet(staging)
+    try:
+        df.write.mode("overwrite").parquet(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     replacing = os.path.exists(path)
     if replacing:
         os.rename(path, old)

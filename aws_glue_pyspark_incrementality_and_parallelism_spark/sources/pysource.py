@@ -18,12 +18,7 @@ shared across workers.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -67,9 +62,6 @@ class SyntheticEventsDataSource(DataSource):
     def reader(self, schema: StructType) -> "SyntheticEventsReader":
         return SyntheticEventsReader(self.options)
 
-    def streamReader(self, schema: StructType) -> "SyntheticEventsStreamReader":
-        return SyntheticEventsStreamReader(self.options)
-
 
 class SyntheticEventsReader(DataSourceReader):
     def __init__(self, options) -> None:
@@ -93,76 +85,6 @@ class SyntheticEventsReader(DataSourceReader):
                 EVENT_TYPES[(h >> 8) % len(EVENT_TYPES)],
                 round(((h >> 16) % 10_000) / 100.0, 2),
             )
-
-
-class SyntheticEventsStreamReader(DataSourceStreamReader):
-    """Streaming half of the connector — the SAME row universe as the
-    batch reader (row i is ``_mix(seed ^ i)``), exposed micro-batch by
-    micro-batch through the Python Data Source streaming API.
-
-    Offset protocol: the offset is ``{"pos": N}`` = rows emitted so far.
-    ``latestOffset`` advances by ``rows_per_batch`` up to ``max_rows``,
-    after which the offset is a fixpoint — so ``processAllAvailable()``
-    terminates and a restarted query resumes from the checkpointed
-    offset with no row lost or repeated (exactly-once: rows are a pure
-    function of their global index, ranges are half-open). Each batch's
-    range splits into ``partitions`` executor-side ``read`` tasks —
-    the driver plans offsets only, it never materializes rows (the same
-    split-plan discipline as the batch reader)."""
-
-    def __init__(self, options) -> None:
-        self.n_partitions = int(options.get("partitions", 4))
-        self.rows_per_batch = int(options.get("rows_per_batch", 100))
-        self.max_rows = int(options.get("max_rows", 300))
-        self.n_users = int(options.get("n_users", 100))
-        self.seed = int(options.get("seed", 42))
-
-    def initialOffset(self) -> dict:
-        return {"pos": 0}
-
-    def latestOffset(self) -> dict:
-        # The planner calls initialOffset/latestOffset per micro-batch;
-        # available data grows by one batch per call until the cap.
-        self._last = getattr(self, "_last", 0)
-        self._last = min(self._last + self.rows_per_batch, self.max_rows)
-        return {"pos": self._last}
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        lo, hi = int(start["pos"]), int(end["pos"])
-        # Restart clamp: a fresh reader instance starts _last at 0, but a
-        # checkpointed restart can hand us offsets at pos N >= rows_per_batch
-        # (re-running the last uncommitted batch). Advance _last to the
-        # resumed position so the NEXT latestOffset continues from N instead
-        # of replaying the ladder from 0 — otherwise an availableNow /
-        # processAllAvailable run after restart can go idle (end <= start)
-        # before the remaining rows are emitted.
-        self._last = max(getattr(self, "_last", 0), lo, hi)
-        if hi <= lo:
-            return []
-        n = self.n_partitions
-        step = max(1, (hi - lo + n - 1) // n)
-        return [
-            InputPartition((s, min(s + step, hi))) for s in range(lo, hi, step)
-        ]
-
-    def read(self, partition: InputPartition):
-        lo, hi = partition.value
-        for event_id in range(lo, hi):
-            h = _mix(self.seed ^ event_id)
-            yield (
-                event_id,
-                h % self.n_users,
-                EVENT_TYPES[(h >> 8) % len(EVENT_TYPES)],
-                round(((h >> 16) % 10_000) / 100.0, 2),
-            )
-
-    def commit(self, end: dict) -> None:
-        # Offsets are derivable so there is nothing to clean up, but the
-        # commit callback is the one signal a RESTARTED reader gets when the
-        # last checkpointed batch was already fully committed (Spark replays
-        # commit() during recovery before planning the next batch) — clamp
-        # progress so latestOffset resumes from the committed position.
-        self._last = max(getattr(self, "_last", 0), int(end["pos"]))
 
 
 def register_python_sources(spark: SparkSession) -> None:

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.incremental import (
     BookmarkStore,
     incremental_read,
-    run_incremental,
 )
 from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import load_table
 
@@ -36,7 +35,8 @@ def test_two_runs_equal_one_full_run(spark, tmp_path):
 
     # Run 1: no bookmark yet -> full slice 1.
     b1 = incremental_read(spark.read.parquet(src), "l_orderkey", store, "lineitem")
-    run_incremental(b1, lambda df: df.write.parquet(out1))
+    b1.df.write.parquet(out1)
+    b1.commit()
     hwm1 = store.get("lineitem")
     assert hwm1 is not None and hwm1 <= 750
 
@@ -45,7 +45,8 @@ def test_two_runs_equal_one_full_run(spark, tmp_path):
 
     # Run 2: bookmark filter must exclude everything from run 1.
     b2 = incremental_read(spark.read.parquet(src), "l_orderkey", store, "lineitem")
-    run_incremental(b2, lambda df: df.write.parquet(out2))
+    b2.df.write.parquet(out2)
+    b2.commit()
 
     union = spark.read.parquet(out1).unionByName(spark.read.parquet(out2))
     assert union.count() == fact.count()
@@ -71,42 +72,19 @@ def test_empty_batch_does_not_regress_hwm(spark, tmp_path):
     store.commit("lineitem", 10_000_000)  # everything already seen
 
     batch = incremental_read(spark.read.parquet(src), "l_orderkey", store, "lineitem")
-    sink = os.path.join(tmp, "never")
-    hwm = run_incremental(batch, lambda df: df.write.parquet(sink))
-    assert hwm is None
-    assert not os.path.exists(sink), "empty batch must not write"
+    assert batch.pending_hwm() is None and batch.rows == 0
+    assert batch.commit() is None
     assert store.get("lineitem") == 10_000_000
 
 
-def test_commit_only_after_sink_success(spark, tmp_path):
-    tmp = str(tmp_path)
-    src, _, _ = _fact_slices(spark, tmp)
-    store = BookmarkStore(os.path.join(tmp, "bookmarks.json"))
-    batch = incremental_read(spark.read.parquet(src), "l_orderkey", store, "lineitem")
-
-    def failing_sink(df):
-        raise RuntimeError("sink down")
-
-    try:
-        run_incremental(batch, failing_sink)
-    except RuntimeError:
-        pass
-    assert store.get("lineitem") is None, "HWM must not advance on sink failure"
-
-
 def test_per_source_state_isolated(tmp_path):
-    store = BookmarkStore(os.path.join(str(tmp_path), "bm.json"))
+    store = BookmarkStore(os.path.join(str(tmp_path), "not_yet", "bm.json"))
+    assert store.get("a") is None
     store.commit("a", 5)
     store.commit("b", 7)
     assert store.get("a") == 5 and store.get("b") == 7
-    store.reset("a")
-    assert store.get("a") is None and store.get("b") == 7
-
-
-def test_reset_under_missing_directory(tmp_path):
-    store = BookmarkStore(str(tmp_path / "not_yet" / "bm.json"))
-    store.reset("a")
-    assert store.get("a") is None
+    store.commit("a", 6)
+    assert store.get("a") == 6 and store.get("b") == 7
 
 
 def test_incremental_aggregate_maintenance(spark):

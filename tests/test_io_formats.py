@@ -157,80 +157,3 @@ class TestPythonDataSource:
         agg = df.groupBy("event_type").agg(F.count("*").alias("n"))
         assert agg.count() == 4
         assert df.filter(F.col("user_id") < 5).count() > 0
-
-    def test_stream_reader_exactly_once_and_matches_batch(self, spark, tmp_path):
-        """Streaming half of the connector: micro-batched offsets cover
-        [0, max_rows) exactly once, rows are identical to the batch
-        reader's universe (same seed ⇒ same _mix values), and the
-        stream goes idle at the cap so processAllAvailable terminates."""
-        from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.pysource import (
-            register_python_sources,
-        )
-
-        register_python_sources(spark)
-        q = (
-            spark.readStream.format("synthetic_events")
-            .option("rows_per_batch", 70)
-            .option("max_rows", 300)
-            .option("partitions", 3)
-            .option("seed", 7)
-            .load()
-            .writeStream.format("memory")
-            .queryName("synth_stream")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = sorted(map(tuple, spark.sql("select * from synth_stream").collect()))
-        assert len(got) == 300, "each row exactly once across micro-batches"
-        assert [r[0] for r in got] == list(range(300))
-        batch = sorted(
-            map(tuple, self._df(spark, partitions=3, rows_per_partition=100, seed=7).collect())
-        )
-        assert got == batch, "stream and batch readers must agree row-for-row"
-
-    def test_stream_reader_restart_from_checkpoint_resumes(self, spark, tmp_path):
-        """Stop/restart-from-checkpoint: the first run ingests a strict
-        prefix (max_rows=140 of 300), then a SECOND query over the same
-        checkpoint raises the cap to 300. The restarted reader is a fresh
-        instance whose in-memory ladder starts at 0; without the restart
-        clamp (partitions()/commit() advancing _last to the checkpointed
-        pos) the second run goes idle before emitting rows 140..299."""
-        from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.pysource import (
-            register_python_sources,
-        )
-
-        register_python_sources(spark)
-        ckpt = str(tmp_path / "ckpt")
-        out = str(tmp_path / "out")
-
-        def run(max_rows: int) -> None:
-            q = (
-                spark.readStream.format("synthetic_events")
-                .option("rows_per_batch", 60)
-                .option("max_rows", max_rows)
-                .option("partitions", 3)
-                .option("seed", 7)
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-
-        run(140)
-        first = spark.read.parquet(out).count()
-        assert first == 140, "first run ingests the prefix"
-        run(300)
-        got = sorted(r[0] for r in spark.read.parquet(out).select("event_id").collect())
-        assert got == list(range(300)), (
-            "restart must resume from the checkpointed offset losslessly: "
-            f"got {len(got)} rows"
-        )

@@ -5,10 +5,12 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_glue_pyspark_incrementality_and_parallelism_spark import pipeline
 from aws_glue_pyspark_incrementality_and_parallelism_spark.operators import reports
+from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.incremental import BookmarkStore
 from aws_glue_pyspark_incrementality_and_parallelism_spark.sources.io import load_table
 
 from .conftest import SF_SMALL, within
@@ -21,9 +23,10 @@ DEADLINE_S = 300
 ETL_JOB_FLOOR = 10
 
 
-def _land(tmp_path, max_orderkey=None) -> str:
+def _land(tmp_path, max_orderkey=None, table="orders") -> str:
     """The ETL's four sf0.001 tables under ``tmp_path``, keeping only the
-    orders with ``o_orderkey <= max_orderkey`` (all of them for None)."""
+    rows of ``table`` (``orders`` or ``lineitem``) whose order key is
+    ``<= max_orderkey`` (all of them for None)."""
     import shutil
 
     import pyarrow.compute as pc
@@ -31,12 +34,14 @@ def _land(tmp_path, max_orderkey=None) -> str:
 
     land = tmp_path / "land"
     land.mkdir()
-    for table in ("lineitem", "customer", "supplier"):
-        shutil.copy(os.path.join(SF_SMALL, f"{table}.parquet"), land)
-    orders = pq.read_table(os.path.join(SF_SMALL, "orders.parquet"))
+    for name in ("lineitem", "orders", "customer", "supplier"):
+        if name != table:
+            shutil.copy(os.path.join(SF_SMALL, f"{name}.parquet"), land)
+    rows = pq.read_table(os.path.join(SF_SMALL, f"{table}.parquet"))
     if max_orderkey is not None:
-        orders = orders.filter(pc.less_equal(orders["o_orderkey"], max_orderkey))
-    pq.write_table(orders, str(land / "orders.parquet"))
+        key = {"orders": "o_orderkey", "lineitem": "l_orderkey"}[table]
+        rows = rows.filter(pc.less_equal(rows[key], max_orderkey))
+    pq.write_table(rows, str(land / f"{table}.parquet"))
     return str(land)
 
 
@@ -165,6 +170,38 @@ def test_some_slice_keys_without_orders(spark, tmp_path):
         assert res.report_rows[name] == got.count() == expected.count() > 0
         assert got.exceptAll(expected).count() == 0
         assert expected.exceptAll(got).count() == 0
+
+
+def test_failed_sink_keeps_bookmark_and_report(spark, tmp_path, monkeypatch):
+    """Run 1 covers half the fact table. Run 2, over all of it, fails
+    inside the Spark job that writes ``sales_by_supplier``: the bookmark
+    keeps run 1's HWM, run 1's report stays as it was, and no staging or
+    set-aside directory is left. A clean rerun then commits the full
+    HWM."""
+    out = str(tmp_path / "out")
+    half = _land(tmp_path, _max_fact_key(SF_SMALL) // 2, table="lineitem")
+    first = within(DEADLINE_S, pipeline.run_etl, spark, half, out)
+    report = first.output_paths["sales_by_supplier"]
+    before = _snapshot(report)
+
+    swap = pipeline.swap_parquet
+
+    def failing_swap(df, path):
+        if path == report:
+            df = df.withColumn("boom", F.raise_error(F.lit("sink down")).cast("string"))
+        swap(df, path)
+
+    monkeypatch.setattr(pipeline, "swap_parquet", failing_swap)
+    with pytest.raises(Exception, match="sink down"):
+        within(DEADLINE_S, pipeline.run_etl, spark, SF_SMALL, out)
+    monkeypatch.undo()
+
+    store = BookmarkStore(os.path.join(out, "_bookmarks.json"))
+    assert store.get("lineitem") == first.committed_hwm < _max_fact_key(SF_SMALL)
+    assert _snapshot(report) == before
+    assert [n for n in os.listdir(out) if "__staging_" in n or "__old_" in n] == []
+    rerun = within(DEADLINE_S, pipeline.run_etl, spark, SF_SMALL, out)
+    assert rerun.committed_hwm == store.get("lineitem") == _max_fact_key(SF_SMALL)
 
 
 def test_warm_etl_job_count(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Reachability guard: no public top-level def in the package is reached
-only from tests.
+"""Reachability guard: no public top-level def, and no public method of a
+package class, is reached only from tests.
 
 An AST scan (no imports, no Spark). Candidates are the public (no
 leading underscore), undecorated top-level functions and classes of every
@@ -10,7 +10,10 @@ A candidate counts as reached when its name appears, anywhere in a root
 file, as a ``Name``, an ``Attribute``, an imported name, or a string
 constant equal to it. Roots are the non-test entry points: the package
 itself, ``__spark_entry__.py``, ``bench.py``, ``parity_sweep.py``,
-``plan_audit.py``, ``perfbench/`` and ``plans/``.
+``plan_audit.py``, ``perfbench/`` and ``plans/``. Public methods of the
+top-level classes of the same modules are held to the same rule, with
+no allowlist: a method Spark or Python calls by protocol is reached by
+the name the roots use for it, and one that nothing calls goes.
 """
 
 from __future__ import annotations
@@ -38,8 +41,6 @@ ROOTS = (
 ALLOWED_UNREACHED = {
     "merge_report_increment": "the merge step the incremental ETL reports "
     "need after a second run (ROADMAP item 1 wires it into run_etl)",
-    "run_incremental": "filter → write → commit in one call; the commit-path "
-    "rewrite of ROADMAP item 1 lands there",
     "write_range_sorted": "the key-clustered landing writer that makes a "
     "bookmark scan O(new data) (ROADMAP item 8)",
     "simhash_frame": "the locality tests' handle on the live simhash vote "
@@ -63,19 +64,41 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(f.read(), filename=path)
 
 
+def _package_modules():
+    """(path relative to the repo, AST) of every package module but
+    ``compat.py``."""
+    for path in _py_files(PACKAGE):
+        if os.path.basename(path) != "compat.py":
+            yield os.path.relpath(path, REPO_ROOT), _parse(path)
+
+
 def _candidates() -> dict[str, str]:
     """Public, undecorated top-level def name -> defining file."""
     out = {}
-    for path in _py_files(PACKAGE):
-        if os.path.basename(path) == "compat.py":
-            continue
-        for node in _parse(path).body:
+    for rel, tree in _package_modules():
+        for node in tree.body:
             if (
                 isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
                 and not node.name.startswith("_")
                 and not node.decorator_list
             ):
-                out[node.name] = os.path.relpath(path, REPO_ROOT)
+                out[node.name] = rel
+    return out
+
+
+def _methods() -> dict[str, str]:
+    """``Class.method`` -> defining file, for every public method of a
+    top-level class."""
+    out = {}
+    for rel, tree in _package_modules():
+        for cls in tree.body:
+            if isinstance(cls, ast.ClassDef):
+                for node in cls.body:
+                    if (
+                        isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                        and not node.name.startswith("_")
+                    ):
+                        out[f"{cls.name}.{node.name}"] = rel
     return out
 
 
@@ -105,6 +128,17 @@ def test_every_public_def_is_reached_outside_tests():
     }
     assert not unreached, (
         "public defs that no non-test entry point reaches; wire each into a "
+        f"real path or delete it with its tests: {sorted(unreached.items())}"
+    )
+
+
+def test_every_public_method_is_reached_outside_tests():
+    reached = _referenced()
+    unreached = {
+        name: path for name, path in _methods().items() if name.split(".")[1] not in reached
+    }
+    assert not unreached, (
+        "public methods that no non-test entry point reaches; wire each into a "
         f"real path or delete it with its tests: {sorted(unreached.items())}"
     )
 

@@ -158,3 +158,15 @@ def test_stream_stream_interval_join(spark, tmp_path):
     ).select("purchase_id", "click_id")
     assert got.count() == expected.count() > 0
     assert expected.exceptAll(got).count() == 0
+
+
+def test_sliding_complete_mode_drops_its_memory_view(spark):
+    """``stream_sliding_complete_mode`` pins its result and drops the
+    memory sink's temp view: two calls leave no ``sgq_sliding_complete_*``
+    table in the catalog, and each result still matches the oracle."""
+    from .oracle import assert_parity
+
+    for _ in range(2):
+        assert_parity(spark, "stream_sliding_complete_mode", SF_SMALL)
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("sgq_sliding_complete_")]
+    assert left == []

@@ -66,7 +66,7 @@ def test_cdc_apply_insert_update_delete(spark, tmp_path):
         ],
         "id long, name string, v long, op string, seq long",
     )
-    apply_cdc_parquet(spark, target, changes, ["id"], op_col="op", seq_col="seq")
+    apply_cdc_parquet(spark, target, changes, ["id"], seq_col="seq")
     got = sorted(map(tuple, spark.read.parquet(target).collect()))
     assert got == [(1, "a", 10), (2, "b2", 21), (4, "d", 40)]
 
@@ -88,6 +88,6 @@ def test_cdc_last_change_per_key_wins(spark, tmp_path):
         ],
         "id long, name string, v long, op string, seq long",
     )
-    apply_cdc_parquet(spark, target, changes, ["id"], op_col="op", seq_col="seq")
+    apply_cdc_parquet(spark, target, changes, ["id"], seq_col="seq")
     got = sorted(map(tuple, spark.read.parquet(target).collect()))
     assert got == [(2, "y", 10)]
