@@ -72,7 +72,8 @@ def observed(obs, zeros: dict) -> dict:
 def pin(df):
     """Materialize a DataFrame and cut its lineage — the repo-wide
     pinning primitive for iterative loops (``iterate``, PageRank,
-    k-means, Markov) and multi-axis distrank rewrites. Use as
+    k-means, Markov), multi-axis distrank rewrites and the ETL's joined
+    frame (``pipeline.run_etl``, which frees it with ``unpin``). Use as
     ``df.transform(pin)``.
 
     Default: ``localCheckpoint`` — executor-local, unreplicated blocks,
@@ -96,6 +97,15 @@ def pin(df):
             )
         return df.checkpoint()
     return df.localCheckpoint()
+
+
+def unpin(df) -> None:
+    """Release the blocks of a frame ``pin`` returned, without waiting.
+
+    A pinned frame's blocks otherwise stay until JVM garbage collection
+    reaches its RDD; a caller that pins on every run and is done with the
+    frame frees them here. A reliable checkpoint keeps its files."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def iterate(state, step, signature, max_rounds: int):

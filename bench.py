@@ -329,9 +329,10 @@ def main() -> None:
     multimodal.release_decode_caches()
     seq_wall = round(time.perf_counter() - warm0 - seq_warmup, 3)
 
-    # The reference's whole-job scenario: incremental scan -> 3-way join
-    # -> cache -> two concurrent FAIR-pool reports -> parquet sinks ->
-    # bookmark commit (this is what BASELINE.md's ~90 s anchor measured).
+    # The reference's whole-job scenario: incremental scan -> 3-way join,
+    # pinned once (session.pin) -> two concurrent FAIR-pool reports ->
+    # parquet sinks -> bookmark commit (this is what BASELINE.md's ~90 s
+    # anchor measured).
     # Deliberately run AFTER the suite on an idle scheduler: this is the
     # like-for-like number against the baseline anchor, so it must not be
     # polluted by suite contention.

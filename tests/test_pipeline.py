@@ -18,9 +18,10 @@ from .conftest import SF_SMALL, within
 
 #: Seconds any one ETL call in this file may take before its test fails.
 DEADLINE_S = 300
-#: Spark jobs of one warm ``run_etl`` at sf0.001 (measured: the one-job
-#: HWM pass, then the broadcasts, shuffle stages and writes of the reports).
-ETL_JOB_FLOOR = 10
+#: Spark jobs of one warm ``run_etl`` at sf0.001 (measured: the HWM pass,
+#: three broadcasts, the pin of the joined frame, the two reports' shuffle
+#: maps and their two writes).
+ETL_JOB_FLOOR = 9
 
 
 def _land(tmp_path, max_orderkey=None, table="orders") -> str:
@@ -113,7 +114,7 @@ def test_pipeline_observation_metrics(spark, tmp_path, caplog):
         "hwm_before", "hwm_after", "slice_rows", "joined_rows", "null_prices",
         "min_orderdate", "max_orderdate", "report_rows", "phase_s",
     )
-    assert tuple(record["phase_s"]) == ("load", "hwm", "reports", "commit")
+    assert tuple(record["phase_s"]) == ("load", "hwm", "join", "reports", "commit")
     assert all(v >= 0 for v in record["phase_s"].values())
     assert record["hwm_before"] is None and record["hwm_after"] == res.committed_hwm
     assert record["slice_rows"] == load_table(spark, SF_SMALL, "lineitem").count()
@@ -122,6 +123,41 @@ def test_pipeline_observation_metrics(spark, tmp_path, caplog):
     lines = [r.getMessage() for r in caplog.records if r.getMessage().startswith("run record ")]
     assert len(lines) == 1
     assert json.loads(lines[0][len("run record "):]) == json.loads(json.dumps(record, default=str))
+
+
+def _stored_rdd_ids(spark) -> set:
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_etl_leaves_no_blocks_behind(spark, tmp_path):
+    """The joined frame is pinned for the reports and released after
+    them: two runs (the second over an empty batch) add no stored RDD
+    and leave nothing in the cache manager. Registry queries run earlier
+    in the session may leave cached frames, so the test clears the cache
+    manager first."""
+    spark.catalog.clearCache()
+    before = _stored_rdd_ids(spark)
+    out = str(tmp_path / "out")
+    for _ in range(2):
+        within(DEADLINE_S, pipeline.run_etl, spark, SF_SMALL, out)
+    assert _stored_rdd_ids(spark) - before == set()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_reliable_pin_lane_matches_default(spark, tmp_path, monkeypatch):
+    """With ``SPARK_GRAFT_RELIABLE_PIN`` set the joined frame is a reliable
+    checkpoint; the run releases it and writes the default lane's reports
+    and bookmark."""
+    default = within(DEADLINE_S, pipeline.run_etl, spark, SF_SMALL, str(tmp_path / "default"))
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_PIN", "1")
+    reliable = within(DEADLINE_S, pipeline.run_etl, spark, SF_SMALL, str(tmp_path / "reliable"))
+    assert reliable.committed_hwm == default.committed_hwm
+    assert reliable.report_rows == default.report_rows
+    for name, path in default.output_paths.items():
+        want = spark.read.parquet(path)
+        got = spark.read.parquet(reliable.output_paths[name])
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
 
 
 def test_no_slice_row_joins(spark, tmp_path):
